@@ -15,13 +15,10 @@ from __future__ import annotations
 
 import argparse
 import os
-import sys
 
-from ..introspect import describe_columns
-from ..nl.ask import generate_sql
+from ..nl.ask import answer_question
 from ..nl.dictionary import load_dictionary, make_skeleton, write_dictionary
 from ..nl.llm import LLMCallError, StubLLM, get_provider
-from ..nl.repair import ensure_readonly
 from ..sources.display import display_result
 from ..sources.queuedata_fixture import queuedata_df, queuedata_dictionary
 from ._common import (
@@ -29,6 +26,7 @@ from ._common import (
     EXIT_LLM_FAIL,
     EXIT_MISSING,
     EXIT_SQL_FAIL,
+    fail,
     open_source,
     require_table,
 )
@@ -81,46 +79,43 @@ def main(argv: list[str] | None = None) -> None:
         out_path = args.schema_out or f"{args.table}.schema.json"
         write_dictionary(out_path, skeleton)
         print(f"Wrote schema skeleton to: {out_path}")
-        # parity note: describe_columns is what the reference feeds the
-        # generator; here the StructType carries the same information.
-        _ = describe_columns(spark.table(args.table))
         return
 
     if not args.question:
-        print("Error: --question is required unless --generate-schema is used.",
-              file=sys.stderr)
-        sys.exit(EXIT_MISSING)
+        fail(EXIT_MISSING, "Error: --question is required unless --generate-schema is used.")
 
     stub = StubLLM(default=args.stub_sql or "") if args.llm == "stub" else None
     # The LLM-failure handler is scoped to the LLM boundary ONLY —
     # provider construction (missing key / SDK) and the provider call
-    # itself, which generate_sql surfaces as LLMCallError (reference:
+    # itself, which answer_question surfaces as LLMCallError (reference:
     # query_llm.py:487-489 wraps just its API call). Context-selection
     # or repair bugs propagate with their own traceback instead of
     # hiding behind EXIT_LLM_FAIL (ADVICE r2).
     try:
         provider = get_provider(args.llm, stub=stub)
     except Exception as e:
-        print(f"[{args.llm.capitalize()} call failed] {e}", file=sys.stderr)
-        sys.exit(EXIT_LLM_FAIL)
+        fail(EXIT_LLM_FAIL, f"[{args.llm.capitalize()} call failed] {e}")
     try:
-        raw, sql = generate_sql(
+        res = answer_question(
             spark, args.table, args.question, provider, meta=meta, model=args.model
         )
     except LLMCallError as e:
-        print(f"[{args.llm.capitalize()} call failed] {e}", file=sys.stderr)
-        sys.exit(EXIT_LLM_FAIL)
+        fail(EXIT_LLM_FAIL, f"[{args.llm.capitalize()} call failed] {e}")
+    except Exception as e:
+        # execute_with_repair tags gate and engine errors with the SQL it
+        # last tried; an untagged error is a bug and keeps its traceback
+        if not hasattr(e, "sql"):
+            raise
+        print(f"=== Cleaned SQL ===\n{e.sql}")
+        fail(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
 
-    print("=== Cleaned SQL ===")
-    print(sql)
+    print(f"=== Cleaned SQL ===\n{res.sql}")
     try:
-        ensure_readonly(sql)
-        display_result(spark.sql(sql), max_rows=args.max_rows)
+        display_result(res.df, max_rows=args.max_rows)
     except SystemExit:
         raise
     except Exception as e:  # engine boundary (reference: query_llm.py:401-403)
-        print(f"[SQL execution failed] {e}", file=sys.stderr)
-        sys.exit(EXIT_SQL_FAIL)
+        fail(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
 
 
 if __name__ == "__main__":

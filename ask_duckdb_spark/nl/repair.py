@@ -14,9 +14,11 @@ the engine parses it. Behavioral parity targets (reference file:line):
 
 Pipeline order is fixed (query_llm.py:491-501): fences → strip →
 canonicalize literals (R5+R6, metadata-driven) → schema-aware repairs
-(R2+R3+R4). On top of the reference's one-shot pipeline we add
-:func:`execute_with_repair`, a Catalyst-error-driven retry: parse/
-analysis failures trigger the repair pass, then one re-execution.
+(R2+R3+R4). :func:`execute_with_repair` is the one place generated or
+typed SQL is gated and run: NL answers reach it after the
+:func:`repair_sql` pre-pass (``nl.ask.answer_question``), typed SQL
+directly. A Catalyst parse/analysis failure moves it to the next
+distinct candidate: the DuckDB→Spark dialect shim, then the repairs.
 """
 
 from __future__ import annotations
@@ -315,36 +317,41 @@ def execute_with_repair(
     meta: dict[str, Any] | None = None,
     synonym_map: dict[str, str] | None = None,
 ):
-    """Run SQL; on parse/analysis failure repair once and retry.
+    """Gate and run SQL; on a parse/analysis failure try the next candidate.
 
-    Returns ``(DataFrame, final_sql, repaired: bool)``. The reference
-    repairs unconditionally before its single execution
-    (query_llm.py:491-506); we execute eagerly first (valid SQL skips
-    the regex pass entirely) and use Catalyst's structured errors as the
-    repair trigger — the validation loop SURVEY.md §4.2 sketches.
+    Returns ``(DataFrame, final_sql, repaired: bool)``. The candidates,
+    in order: the statement as given; the dialect shim's translation
+    (LLMs prompted for this tool family routinely emit DuckDB SQL, the
+    reference's engine); the regex repairs of that translation
+    (aliases, literal case, identifier typos). Each is built only when
+    the one before it failed, and each DISTINCT candidate is gated and
+    analyzed at most once: a failed Catalyst analysis costs ~20x a good
+    one, so an unchanged statement is never re-run. The read-only gate
+    raises at once; when every candidate fails analysis, the last error
+    is re-raised. An error raised here carries the statement it was
+    raised for as ``.sql``.
     """
     from pyspark.errors import AnalysisException, ParseException
 
     from .dialect_shim import to_spark_sql
 
-    ensure_readonly(sql)
-    try:
-        return spark.sql(sql), sql, False
-    except (AnalysisException, ParseException):
-        # Two repair layers, tried cumulatively: (1) the dialect shim —
-        # LLMs prompted for this tool family routinely emit DuckDB SQL
-        # (the reference's engine IS DuckDB), and the shim is a no-op on
-        # valid Spark SQL; (2) the reference's regex repairs (aliases,
-        # literal case, identifier typos).
+    def candidates():
+        yield sql
         shimmed = to_spark_sql(sql)
-        if shimmed != sql:
-            try:
-                ensure_readonly(shimmed)
-                return spark.sql(shimmed), shimmed, True
-            except (AnalysisException, ParseException):
-                pass
-        repaired = repair_sql(
-            shimmed, actual_cols, meta=meta, synonym_map=synonym_map
-        )
-        ensure_readonly(repaired)
-        return spark.sql(repaired), repaired, True
+        yield shimmed
+        yield repair_sql(shimmed, actual_cols, meta=meta, synonym_map=synonym_map)
+
+    tried: list[str] = []
+    for candidate in candidates():
+        if candidate in tried:
+            continue
+        tried.append(candidate)
+        try:
+            ensure_readonly(candidate)
+            return spark.sql(candidate), candidate, candidate != sql
+        except (AnalysisException, ParseException) as e:
+            e.sql, error = candidate, e
+        except Exception as e:  # the read-only gate, or an engine fault
+            e.sql = candidate
+            raise
+    raise error

@@ -156,48 +156,46 @@ FROM customer t FULL OUTER JOIN src s ON t.c_custkey = s.k
 """
 
 
-@query("x116_merge_upsert", oracle=_X116_ORACLE)
-def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-style MERGE INTO as one declarative full-outer plan.
+# The r12 MERGE plan, shared by x116 and the streaming CDC apply
+# (streaming/upsert.py). MERGE under the hood of every lakehouse writer
+# IS this operation, and this is the shape a small-source MERGE must
+# take at 100 TB: the corpus-sized TARGET is never shuffled. The naive
+# single full-outer join (x116's r7-r11 form, and what its SQL oracle
+# literally states) hash-partitions the whole target on the merge key
+# per MERGE — a corpus shuffle for a batch-sized change set. Instead
+# the full-outer is decomposed, exactly (both key columns are unique —
+# c_custkey is the target PK, k is post-groupBy), into:
+#
+# - UPDATE ∪ KEEP: target LEFT JOIN source — source is batch-sized,
+#   AQE broadcasts it, target is STREAMED;
+# - INSERT: source keys absent from the target, found WITHOUT
+#   shuffling the target by first semi-reducing the target against
+#   the broadcast source (``touched`` <= |source| rows), then
+#   anti-joining the source against that small set (broadcast).
+#
+# Target cost: two streaming scans, zero exchanges — scans are the
+# cheap currency at 100 TB, shuffles the expensive one. A streaming
+# MERGE pays this join per micro-batch forever, so the removed target
+# shuffle is the difference between a sink that keeps up and one that
+# falls behind as the target grows. If the source outgrows broadcast,
+# AQE degrades each join to shuffled form and the symmetric full-outer
+# becomes competitive again — that regime choice belongs to the
+# planner, not a hint (no forced broadcasts here). The source aggregate
+# stays map-side combinable; balances ride exact integer cents
+# (``bal_units``) until one identical closing division on both engines.
+# The source feeds three consumers (update join, touched semi, insert
+# anti), so callers persist it: without that each consumer re-ran the
+# orders scan + aggregate (measured 12-exchange plan at sf0.1x10).
 
-    Source = 1998 order revenue per customer key, with every 50th key
-    displaced out of the target's key range so NOT-MATCHED-BY-TARGET
-    inserts occur. Semantics: WHEN MATCHED THEN UPDATE (balance +=
-    delta), WHEN NOT MATCHED THEN INSERT (synthesized row), WHEN NOT
-    MATCHED BY SOURCE THEN keep — i.e. the full MERGE matrix, which a
-    single full-outer join + coalesce projection expresses exactly.
 
-    Scale (100 TB): MERGE under the hood of every lakehouse writer IS
-    this operation, and the r12 plan is the shape a small-source MERGE
-    must take there: the corpus-sized TARGET is never shuffled. The
-    naive single full-outer join (this operator's r7-r11 form, and
-    what the SQL oracle literally states) hash-partitions the whole
-    target on the merge key per MERGE — a corpus shuffle for a batch-
-    sized change set. Instead the full-outer is decomposed, exactly
-    (both key columns are unique — c_custkey is the target PK, k is
-    post-groupBy), into:
+def merge_source(orders: DataFrame) -> DataFrame:
+    """Order revenue per merge key as exact cents: ``(k, delta_units)``.
 
-    - UPDATE ∪ KEEP: target LEFT JOIN source — source is batch-sized,
-      AQE broadcasts it, target is STREAMED;
-    - INSERT: source keys absent from the target, found WITHOUT
-      shuffling the target by first semi-reducing the target against
-      the broadcast source (``touched`` <= |source| rows), then
-      anti-joining the source against that small set (broadcast).
-
-    Target cost: two streaming scans, zero exchanges — scans are the
-    cheap currency at 100 TB, shuffles the expensive one. If the
-    source outgrows broadcast, AQE degrades each join to shuffled form
-    and the symmetric full-outer becomes competitive again — that
-    regime choice belongs to the planner, not a hint (no forced
-    broadcasts here). The source aggregate stays map-side combinable;
-    balances ride exact integer cents until one identical closing
-    division on both engines.
+    Every 50th customer key is displaced out of the target's key range
+    so NOT-MATCHED-BY-TARGET inserts occur.
     """
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    src = (
-        o.filter(F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-        .select(
+    return (
+        orders.select(
             (
                 F.col("o_custkey")
                 + F.when(F.col("o_custkey") % 50 == 0, F.lit(1000000)).otherwise(0)
@@ -206,32 +204,44 @@ def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("k")
         .agg(F.sum("u").cast("bigint").alias("delta_units"))
-        # Three consumers (update join, touched semi, insert anti) —
-        # persist so the batch aggregate's scan+shuffle runs once
-        # (x2's lifecycle pattern; without it each consumer re-ran the
-        # orders scan + agg: measured 12-exchange plan at sf0.1x10).
-        .persist()
     )
-    # WHEN MATCHED / NOT MATCHED BY SOURCE: one broadcast left join,
-    # target streamed.
-    upd = c.alias("t").join(
+
+
+def cents_state(customer: DataFrame) -> DataFrame:
+    """The customer table with its balance as integer cents ``bal_units``."""
+    return customer.select(
+        "c_custkey",
+        "c_name",
+        "c_nationkey",
+        icents("c_acctbal").alias("bal_units"),
+        "c_mktsegment",
+    )
+
+
+def merge_cents(target: DataFrame, src: DataFrame) -> DataFrame:
+    """MERGE ``src`` into a :func:`cents_state` target, in cents.
+
+    WHEN MATCHED THEN UPDATE (balance += delta), WHEN NOT MATCHED BY
+    SOURCE THEN keep, WHEN NOT MATCHED THEN INSERT a synthesized row —
+    the full MERGE matrix, planned as the decomposition above.
+    """
+    # update and keep: one broadcast left join, target streamed
+    upd = target.alias("t").join(
         src.alias("s"), F.col("t.c_custkey") == F.col("s.k"), "left"
-    )
-    bal_units = F.coalesce(icents("t.c_acctbal"), F.lit(0)) + F.coalesce(
-        F.col("s.delta_units"), F.lit(0)
-    )
-    upd = upd.select(
+    ).select(
         F.col("t.c_custkey").alias("c_custkey"),
         F.col("t.c_name").alias("c_name"),
         F.col("t.c_nationkey").cast("int").alias("c_nationkey"),
-        money(bal_units, 100).alias("c_acctbal"),
+        (
+            F.coalesce(F.col("t.bal_units"), F.lit(0))
+            + F.coalesce(F.col("s.delta_units"), F.lit(0))
+        ).alias("bal_units"),
         F.col("t.c_mktsegment").alias("c_mktsegment"),
     )
-    # WHEN NOT MATCHED (insert): source keys with no target row. The
-    # target is semi-reduced against the broadcast source first, so
-    # the anti-join's build side is batch-sized — the target itself is
-    # never a join build side and never shuffles.
-    touched = c.select(F.col("c_custkey").alias("k")).join(
+    # insert: the target is semi-reduced against the broadcast source
+    # first, so the anti-join's build side is batch-sized — the target
+    # itself is never a join build side and never shuffles
+    touched = target.select(F.col("c_custkey").alias("k")).join(
         src.select("k"), "k", "left_semi"
     )
     ins = src.join(touched, "k", "left_anti").select(
@@ -240,10 +250,39 @@ def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name"
         ),
         F.lit(-1).cast("int").alias("c_nationkey"),
-        money(F.col("delta_units"), 100).alias("c_acctbal"),
+        F.col("delta_units").alias("bal_units"),
         F.lit("UNKNOWN").alias("c_mktsegment"),
     )
-    return unpersist_with(upd.unionByName(ins), src)
+    return upd.unionByName(ins)
+
+
+def dollars_view(state: DataFrame) -> DataFrame:
+    """A cents state projected to x116's output schema (dollars)."""
+    return state.select(
+        "c_custkey",
+        "c_name",
+        "c_nationkey",
+        money(F.col("bal_units"), 100).alias("c_acctbal"),
+        "c_mktsegment",
+    )
+
+
+@query("x116_merge_upsert", oracle=_X116_ORACLE)
+def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Delta-style MERGE INTO as one declarative plan.
+
+    Source = 1998 order revenue per customer key (:func:`merge_source`);
+    target = ``customer``. Semantics: the full MERGE matrix, which a
+    single full-outer join + coalesce projection expresses exactly (the
+    oracle). The plan is the r12 decomposition described above
+    :func:`merge_source`: the target is only ever streamed.
+    """
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    src = merge_source(
+        o.filter(F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
+    ).persist()
+    return unpersist_with(dollars_view(merge_cents(cents_state(c), src)), src)
 
 
 # ---------------------------------------------------------------------------

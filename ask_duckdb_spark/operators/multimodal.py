@@ -515,7 +515,8 @@ def x20_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified end to end. Works because fixture text is pure ASCII
     (byte value == codepoint); a real decoder wouldn't care.
     """
-    # No widen() — settled by a 9-run COLD close series this round
+    # No widen() — settled by the widen-vs-control subset (close1-5 +
+    # ctl1-4) of the 17-run r14 COLD close series
     # (VERDICT r13 item 1 asked for the restore; the restore was made,
     # then measured on the driver's own cold-bench protocol and
     # REVERTED on that evidence, BENCHLOG r14). Alternating cold

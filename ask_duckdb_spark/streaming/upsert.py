@@ -1,12 +1,13 @@
 """Streaming CDC apply: x116's MERGE upsert as a foreachBatch loop.
 
 The batch operator (operators/layout.py x116) merges one source
-aggregate into the target via the r12 decomposition (broadcast left
-join + semi-reduce-then-anti inserts — the target is streamed, never
-shuffled). In production the source arrives CONTINUOUSLY — this
-module is the apply loop that keeps a target table current under a
-stream of updates, the pattern behind every lakehouse streaming-MERGE
-sink:
+aggregate into the target. This loop builds each micro-batch's merge
+from the SAME functions (``merge_source``, ``merge_cents``,
+``cents_state``, ``dollars_view``); the r12 rationale for their plan
+shape sits beside them. In production the source arrives
+CONTINUOUSLY — this module is the apply loop that keeps a target table
+current under a stream of updates, the pattern behind every lakehouse
+streaming-MERGE sink:
 
 - **State = versioned parquet snapshots** (``target/v00000`` …), a
   poor-man's commit log: version ``b+1`` is derived from version ``b``
@@ -25,9 +26,8 @@ sink:
   rows are stable under later updates.
 
 Scale (100 TB): each micro-batch costs one map-side-combinable source
-aggregate plus two STREAMING scans of the current snapshot (broadcast
-left join + the insert semi/anti pair — zero snapshot exchanges, the
-x116 r12 posture; a bucketed/clustered snapshot additionally turns
+aggregate plus two STREAMING scans of the current snapshot (zero
+snapshot exchanges; a bucketed/clustered snapshot additionally turns
 the rewrite into touched-file surgery), and version GC keeps the
 last K snapshots (time travel for free). A real deployment swaps the
 directory-versioning for a table format's atomic commit; the PLAN per
@@ -39,13 +39,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators._util import icents, money
+from ..operators.layout import cents_state, merge_cents, merge_source
+from ..operators.layout import dollars_view as final_view
 
 __all__ = ["upsert_apply", "start_upsert_apply", "current_state", "final_view"]
-
-_STATE_COLS = ("c_custkey", "c_name", "c_nationkey", "bal_units", "c_mktsegment")
 
 
 def _vdir(target_dir: str, version: int) -> str:
@@ -54,13 +52,7 @@ def _vdir(target_dir: str, version: int) -> str:
 
 def bootstrap(customer_df: DataFrame, target_dir: str) -> None:
     """Write version 0 of the state from the initial target table."""
-    customer_df.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        icents("c_acctbal").alias("bal_units"),
-        "c_mktsegment",
-    ).write.mode("overwrite").parquet(_vdir(target_dir, 0))
+    cents_state(customer_df).write.mode("overwrite").parquet(_vdir(target_dir, 0))
 
 
 def upsert_apply(
@@ -72,55 +64,14 @@ def upsert_apply(
     Separated from the stream wiring (novelty_ingest discipline):
     testable batch-by-batch, reusable from any incremental driver.
     """
-    src = (
-        batch_df.select(
-            (
-                F.col("o_custkey")
-                + F.when(F.col("o_custkey") % 50 == 0, F.lit(1000000)).otherwise(0)
-            ).alias("k"),
-            icents("o_totalprice").alias("u"),
-        )
-        .groupBy("k")
-        .agg(F.sum("u").cast("bigint").alias("delta_units"))
-    )
-    # r12: same decomposition as batch x116 — the snapshot (the
-    # corpus-sized side, re-joined EVERY micro-batch) is only ever
-    # STREAMED, never shuffled: broadcast left join for update/keep,
-    # semi-reduce-then-anti for inserts. A streaming MERGE pays this
-    # join per batch forever, so the removed per-batch target shuffle
-    # is the difference between a sink that keeps up and one that
-    # falls behind as the target grows. src is micro-batch-sized by
-    # construction; persisted for its three consumers and released
-    # right after the eager snapshot write.
-    src = src.persist()
+    # src is micro-batch-sized by construction; persisted for its three
+    # consumers and released right after the eager snapshot write
+    src = merge_source(batch_df).persist()
     try:
         prev = spark.read.parquet(_vdir(target_dir, batch_id))
-        upd = prev.alias("t").join(
-            src.alias("s"), F.col("t.c_custkey") == F.col("s.k"), "left"
-        ).select(
-            F.col("t.c_custkey").alias("c_custkey"),
-            F.col("t.c_name").alias("c_name"),
-            F.col("t.c_nationkey").cast("int").alias("c_nationkey"),
-            (
-                F.col("t.bal_units")
-                + F.coalesce(F.col("s.delta_units"), F.lit(0))
-            ).cast("bigint").alias("bal_units"),
-            F.col("t.c_mktsegment").alias("c_mktsegment"),
+        merge_cents(prev, src).write.mode("overwrite").parquet(
+            _vdir(target_dir, batch_id + 1)
         )
-        touched = prev.select(F.col("c_custkey").alias("k")).join(
-            src.select("k"), "k", "left_semi"
-        )
-        ins = src.join(touched, "k", "left_anti").select(
-            F.col("k").alias("c_custkey"),
-            F.concat(F.lit("Customer#new#"), F.col("k").cast("string")).alias(
-                "c_name"
-            ),
-            F.lit(-1).cast("int").alias("c_nationkey"),
-            F.col("delta_units").cast("bigint").alias("bal_units"),
-            F.lit("UNKNOWN").alias("c_mktsegment"),
-        )
-        merged = upd.unionByName(ins)
-        merged.write.mode("overwrite").parquet(_vdir(target_dir, batch_id + 1))
     finally:
         src.unpersist()
 
@@ -131,17 +82,6 @@ def current_state(spark: SparkSession, target_dir: str) -> DataFrame:
         int(d[1:]) for d in os.listdir(target_dir) if d.startswith("v")
     )
     return spark.read.parquet(_vdir(target_dir, versions[-1]))
-
-
-def final_view(state: DataFrame) -> DataFrame:
-    """Project the cents state to x116's output schema (dollars)."""
-    return state.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        money(F.col("bal_units"), 100).alias("c_acctbal"),
-        "c_mktsegment",
-    )
 
 
 def start_upsert_apply(

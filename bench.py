@@ -185,6 +185,9 @@ def main() -> int:
     # headline queries are sub-300 ms and the floor is most of their
     # wall. Reported so the ratio can be decomposed from driver
     # artifacts alone (see BENCHLOG.md r5 scale curve).
+    # A measurement that fails is recorded here (exception class and
+    # message), never silently dropped.
+    errors: dict[str, str] = {}
     floor = None
     try:
         region = os.path.join(sf_dir, "region.parquet")
@@ -194,8 +197,8 @@ def main() -> int:
             spark.read.parquet(region).groupBy("r_name").count().count()
             walls.append(time.time() - t0)
         floor = round(min(walls), 3)
-    except Exception:
-        pass
+    except Exception as e:
+        errors["per_query_floor"] = f"{type(e).__name__}: {e}"
     # Echo the EFFECTIVE session geometry (VERDICT r13 item 2 / next-
     # round 2): the driver's low-core control run inferred whether
     # SPARK_GRAFT_CPUS was honored from per-query walls alone and
@@ -250,7 +253,8 @@ def main() -> int:
                     wall = round(time.time() - t0, 3)
                     if rep == 0 or wall < tgt[name]:
                         tgt[name] = wall
-    except Exception:
+    except Exception as e:
+        errors["duckdb"] = f"{type(e).__name__}: {e}"
         duck_timings = {}
         v2_duck = {}
 
@@ -355,6 +359,7 @@ def main() -> int:
                 "master": eff_master,
                 "default_parallelism": eff_parallelism,
                 "shuffle_partitions": eff_shuffle,
+                "errors": errors,
     }
     print(json.dumps(payload))
     # The driver's BENCH artifact captures only the TAIL of stdout, and
@@ -392,6 +397,7 @@ def main() -> int:
                     "master",
                     "default_parallelism",
                     "shuffle_partitions",
+                    "errors",
                 )
             }
         )

@@ -15,10 +15,14 @@ SF_DIR_001 = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    """The session's managed tables live in a fresh temp warehouse, so
+    tables a killed run left under ``./spark-warehouse`` cannot fail
+    the next run's ``saveAsTable`` (LOCATION_ALREADY_EXISTS)."""
     from ask_duckdb_spark.session import get_spark
 
-    spark = get_spark("tests")
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    spark = get_spark("tests", extra_conf={"spark.sql.warehouse.dir": warehouse})
     yield spark
 
 

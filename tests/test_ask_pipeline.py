@@ -197,3 +197,53 @@ def test_execute_with_repair_dialect_then_identifier(spark, queuedata):
     )
     assert repaired
     assert "queue" in final_sql and "get_json_object" in final_sql
+
+
+def test_answer_question_runs_duckdb_dialect_answer(spark, queuedata):
+    """NL answers get the executor's dialect-shim retry after the
+    repair pre-pass, so DuckDB-flavoured LLM output (arrow JSON access,
+    GROUP BY ALL) still runs."""
+    df, meta = queuedata
+    stub = StubLLM(
+        default="SELECT copytools->>'rucio' AS rc, count(*) AS n"
+        " FROM queuedata GROUP BY ALL"
+    )
+    res = answer_question(spark, "queuedata", "rucio copytools", stub, meta=meta)
+    assert "get_json_object" in res.sql
+    got = {(r.rc, r.n) for r in res.df.collect()}
+    want = {
+        (r.rc, r.n)
+        for r in df.groupBy(F.get_json_object("copytools", "$.rucio").alias("rc"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert got == want and got
+
+
+@pytest.mark.parametrize(
+    "sql, distinct",
+    [
+        # neither the shim nor the repairs change it: one candidate
+        ("SELECT no_such_column FROM queuedata", 1),
+        # the shim rewrites the arrow, the repairs change nothing more
+        ("SELECT no_such_column, copytools->>'rucio' FROM queuedata", 2),
+    ],
+)
+def test_unrepairable_sql_analyzed_once_per_candidate(
+    spark, queuedata, monkeypatch, sql, distinct
+):
+    from pyspark.errors import AnalysisException
+
+    df, meta = queuedata
+    seen = []
+    analyze = spark.sql
+
+    def counting(stmt, *args, **kwargs):
+        seen.append(stmt)
+        return analyze(stmt, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", counting)
+    with pytest.raises(AnalysisException) as err:
+        execute_with_repair(spark, sql, set(df.columns), meta=meta)
+    assert len(seen) == len(set(seen)) == distinct
+    assert err.value.sql == seen[-1]

@@ -103,3 +103,27 @@ def test_catalog_scheme_resolves_managed_tables(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS cats_region")
         spark.sql("DROP TABLE IF EXISTS cats_orders")
+
+
+def test_stale_working_dir_table_does_not_block_save(spark):
+    """A killed run leaves a non-empty managed-table directory in the
+    working dir's ``spark-warehouse``. The directory is left in place on
+    purpose: the bucketed-index test in test_corpus_ops.py runs later in
+    the same session and writes the same table name, so it must not see
+    it either."""
+    import os
+
+    stale = os.path.join("spark-warehouse", "banded_idx_b")
+    os.makedirs(stale, exist_ok=True)
+    with open(os.path.join(stale, "part-00000-stale.parquet"), "wb") as f:
+        f.write(b"left by a killed run")
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    assert os.path.realpath(warehouse.removeprefix("file:")) != os.path.realpath(
+        "spark-warehouse"
+    )
+    write_bucketed(load_table(spark, SF_DIR, "region"), "banded_idx_b", ["r_regionkey"])
+    try:
+        assert bucketed_join_ready(spark, "banded_idx_b")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS banded_idx_b")

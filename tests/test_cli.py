@@ -216,3 +216,38 @@ def test_ask_generate_schema(spark, tmp_path, capsys):
     names = [c["name"] for c in skeleton["columns"]]
     assert "queue" in names and "copytools" in names
     assert f"Wrote schema skeleton to: {out_path}" in capsys.readouterr().out
+
+
+def test_ask_duckdb_dialect_answer_is_exit_0(spark, capsys):
+    """A DuckDB-dialect LLM answer runs through the dialect-shim retry;
+    the SQL printed is the one that ran."""
+    code = exit_code(
+        cli_ask.main,
+        ["--sf-dir", SF_DIR, "--with-queuedata-fixture", "--llm", "stub",
+         "--stub-sql",
+         "SELECT copytools->>'rucio' AS rc, count(*) AS n FROM queuedata GROUP BY ALL",
+         "--question", "rucio copytools"],
+    )
+    assert code == 0
+    out = capsys.readouterr().out
+    assert "=== Cleaned SQL ===" in out and "get_json_object" in out
+    assert "=== Query result (" in out
+
+
+@pytest.mark.parametrize(
+    "stub_sql, error",
+    [
+        ("SELECT no_such_column FROM queuedata", "[SQL execution failed]"),
+        ("DROP TABLE queuedata", "read-only violation"),
+    ],
+)
+def test_ask_failed_sql_is_exit_4_and_printed(spark, capsys, stub_sql, error):
+    code = exit_code(
+        cli_ask.main,
+        ["--sf-dir", SF_DIR, "--with-queuedata-fixture", "--llm", "stub",
+         "--stub-sql", stub_sql, "--question", "anything"],
+    )
+    assert code == 4
+    captured = capsys.readouterr()
+    assert f"=== Cleaned SQL ===\n{stub_sql}\n" in captured.out
+    assert error in captured.err

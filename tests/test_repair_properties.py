@@ -159,7 +159,8 @@ def test_execute_with_repair_full_loop(spark, queuedata, case):
     """Every generated corruption must end in a successfully analyzed,
     read-only SELECT over real columns — typos and aliases via the
     AnalysisException-triggered retry, fences and literal casing via
-    the unconditional pre-pass (as generate_sql composes them)."""
+    the unconditional pre-pass (as nl.ask.answer_question composes
+    them)."""
     from ask_duckdb_spark.nl.dictionary import build_synonym_map
     from ask_duckdb_spark.nl.repair import execute_with_repair, repair_sql
 
@@ -169,7 +170,7 @@ def test_execute_with_repair_full_loop(spark, queuedata, case):
     kind, sql, want_col = case
 
     if kind in ("fence", "literal"):
-        # generate_sql always runs the regex pass before execution
+        # answer_question always runs the regex pass before execution
         sql = repair_sql(sql, cols, meta=meta, synonym_map=syn)
 
     out, final_sql, repaired = execute_with_repair(
