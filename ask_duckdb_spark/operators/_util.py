@@ -101,7 +101,8 @@ def unpersist_with(result: DataFrame, cached: DataFrame) -> DataFrame:
     x74/x91 "rerun 15-40x slower" readings were instead an artifact of
     re-executing a RELEASED plan after clearCache (join strategies
     re-planned without cached-relation stats) — the driver never does
-    that, and scripts/r14_sweep.py rebuilds per rep accordingly.
+    that, so the r14 sweep rebuilt per rep (OPTIMIZATION_r14.md item 6;
+    scripts/measure.py keeps that protocol).
     """
 
     def _drop(c=cached):

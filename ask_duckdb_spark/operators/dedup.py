@@ -441,12 +441,12 @@ def _sig_est(sig_a, sig_b) -> Column:
     One definition shared by the registered est path and
     :func:`_jaccard_filtered` so the estimator can never drift between
     consumers. The HOF chain is kept deliberately: an r14 interleaved
-    A/B (scripts/r14_ab_misc.py) measured the 32-term unrolled
+    A/B (OPTIMIZATION_r14.md item 2) measured the 32-term unrolled
     element_at form ~15-20% SLOWER end-to-end at sf0.1 — Spark 4's
     HOF evaluation is fast, and the unrolled tree only bloats the
     plan/codegen (the same negative result as the vectors.py unroll
-    trial, scripts/r14_dot_micro.py: all dot formulations within 3%
-    per-pair)."""
+    trial, OPTIMIZATION_r14.md "Examined, left alone" and BENCHLOG
+    r14: all dot formulations within 3% per-pair)."""
     return (
         F.size(
             F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from ._util import widen
 from .registry import query
 
 
@@ -482,7 +481,11 @@ def x36_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the byte-slicing arithmetic so the fan-out, ordering, and
     digests are all differentially verified.
     """
-    d = widen(load_table(spark, sf_dir, "documents"))
+    # No widen(), as for x20 below: on the ~600 KB fixture its
+    # round-robin exchange cost more than the parallel Python stage
+    # bought (cold series at sf0.1, BENCHLOG "x36 widen"). The output
+    # is ordered by (doc_id, frame_idx), so partitioning cannot change it.
+    d = load_table(spark, sf_dir, "documents")
     payload = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return payload.mapInPandas(_sample_frames, FRAME_SCHEMA).orderBy(
         "doc_id", "frame_idx"

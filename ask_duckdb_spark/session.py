@@ -13,6 +13,7 @@ Catalyst plays DuckDB's role. Two entry paths:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -80,7 +81,9 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     load_table calls this on EVERY table load — ~25 ms per query of
     pure driver latency at bench scale. Nothing in the repo unpins a
     conf mid-session, so a session-scoped flag is safe; callers that
-    deliberately change confs (tests) construct fresh sessions.
+    deliberately change confs (tests) construct fresh sessions. A conf
+    the session refuses is left as it is, with a ``RuntimeWarning`` that
+    names the conf, the value and the error.
     """
     if spark.__dict__.get("_adbs_conf_pinned"):
         return spark
@@ -88,9 +91,15 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)
-        except Exception:
-            # Non-settable on this session/version: leave as-is.
-            pass
+        except Exception as e:
+            # Non-settable on this session/version: leave as-is, but say
+            # so — an unpinned conf can split results from the oracle.
+            warnings.warn(
+                f"apply_runtime_conf: could not pin {k}={v}: "
+                f"{type(e).__name__}: {e}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     spark.__dict__["_adbs_conf_pinned"] = True
     return spark
 

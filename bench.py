@@ -93,6 +93,64 @@ HEADLINE_V2 = [
 ]
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Bring a fresh session to steady state before anything is timed."""
+    # Warm the JVM + parquet footers so per-query timings measure the
+    # engine, not session startup.
+    QUERIES["g1_count_star"](spark, sf_dir).count()
+    # Spin up the Python worker daemon pool once (mapInPandas operators
+    # would otherwise pay ~100 ms/worker startup inside their timing).
+    import pandas as _pd  # noqa: F401  (workers import pandas on boot)
+
+    def _ident(batches):
+        yield from batches
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).mapInPandas(_ident, "id long").count()
+    # Warm every headline plan TWICE at sf0.01 (the sibling fixture dir,
+    # different files from the measured SF): the first pass populates
+    # the Janino class cache (x2's 32-permutation minhash alone costs
+    # ~5 s of one-time compilation), the second drives the generated
+    # code past the JVM's tiered-JIT thresholds so C2-compiled code is
+    # what gets measured. Measured effect at sf0.1 (r5): x2 5.3 s
+    # half-warm -> 2.7 s steady, q3 1.37 -> 0.95, x22 1.72 -> 0.86.
+    # Timings then measure steady-state execution — the regime a 100 TB
+    # run lives in, and what the sec/query comparison is about. (DuckDB
+    # needs no analogue: it has no JIT; its first run IS steady-state.)
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
+    if os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/"):
+        for _ in range(2):
+            for name in HEADLINE + HEADLINE_V2:
+                QUERIES[name](spark, warm_dir).count()
+            spark.catalog.clearCache()  # drop sf0.01 persisted frames
+
+
+def floor_probe(spark, sf_dir: str, errors: dict[str, str]) -> float | None:
+    """Spark's fixed per-query floor, min of 5; a failure goes to
+    ``errors["per_query_floor"]`` and returns None.
+
+    The probe is the cheapest analytic query expressible (5-row scan ->
+    one shuffle -> agg). Everything in it — plan analysis, AQE stage
+    rounds, job/task scheduling — is paid by EVERY query regardless of
+    data volume, and is the regime-dependent part of the ratio: at
+    100 TB a query runs minutes and the floor is noise; at sf0.1 half
+    the headline queries are sub-300 ms and the floor is most of their
+    wall. Reported so the ratio can be decomposed from the JSON record
+    alone (see BENCHLOG.md r5 scale curve).
+    """
+    try:
+        region = os.path.join(sf_dir, "region.parquet")
+        walls = []
+        for _ in range(5):
+            t0 = time.time()
+            spark.read.parquet(region).groupBy("r_name").count().count()
+            walls.append(time.time() - t0)
+        return round(min(walls), 3)
+    except Exception as e:
+        errors["per_query_floor"] = f"{type(e).__name__}: {e}"
+        return None
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -112,34 +170,7 @@ def main() -> int:
         settled_wait += 5
     load_start = os.getloadavg()[0]
     spark = get_spark("bench")
-    # Warm the JVM + parquet footers so per-query timings measure the
-    # engine, not session startup (the driver compares sec/query).
-    QUERIES["g1_count_star"](spark, sf_dir).count()
-    # Spin up the Python worker daemon pool once (mapInPandas operators
-    # would otherwise pay ~100 ms/worker startup inside their timing).
-    import pandas as _pd  # noqa: F401  (workers import pandas on boot)
-
-    def _ident(batches):
-        yield from batches
-
-    n = spark.sparkContext.defaultParallelism
-    spark.range(0, n, 1, n).mapInPandas(_ident, "id long").count()
-    # Warm every headline plan TWICE at sf0.01 (1/10 of the measured
-    # SF, different files): the first pass populates the Janino class
-    # cache (x2's 32-permutation minhash alone costs ~5 s of one-time
-    # compilation), the second drives the generated code past the JVM's
-    # tiered-JIT thresholds so C2-compiled code is what gets measured.
-    # Measured effect at sf0.1 (r5): x2 5.3 s half-warm -> 2.7 s steady,
-    # q3 1.37 -> 0.95, x22 1.72 -> 0.86. Timings below then measure
-    # steady-state execution — the regime a 100 TB run lives in, and
-    # what the sec/query comparison is about. (DuckDB needs no analogue:
-    # it has no JIT; its first run IS steady-state.)
-    warm_dir = "/root/testdata/sf0.01"
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for _ in range(2):
-            for name in HEADLINE + HEADLINE_V2:
-                QUERIES[name](spark, warm_dir).count()
-            spark.catalog.clearCache()  # drop sf0.01 persisted frames
+    warm_up(spark, sf_dir)
 
     # Min-of-reps: host noise is one-sided (a noisy-neighbor burst can
     # only ADD wall time), so min-of-reps is the standard steady-state
@@ -176,29 +207,10 @@ def main() -> int:
             # queries — each builds a distinct plan — but they would
             # accumulate memory across the loop).
             spark.catalog.clearCache()
-    # Measure Spark's fixed per-query floor: the cheapest analytic
-    # query expressible (5-row scan -> one shuffle -> agg), min of 5.
-    # Everything in it — plan analysis, AQE stage rounds, job/task
-    # scheduling — is paid by EVERY headline query regardless of data
-    # volume, and is the regime-dependent part of the ratio: at 100 TB
-    # a query runs minutes and the floor is noise; at sf0.1 half the
-    # headline queries are sub-300 ms and the floor is most of their
-    # wall. Reported so the ratio can be decomposed from driver
-    # artifacts alone (see BENCHLOG.md r5 scale curve).
     # A measurement that fails is recorded here (exception class and
     # message), never silently dropped.
     errors: dict[str, str] = {}
-    floor = None
-    try:
-        region = os.path.join(sf_dir, "region.parquet")
-        walls = []
-        for _ in range(5):
-            t0 = time.time()
-            spark.read.parquet(region).groupBy("r_name").count().count()
-            walls.append(time.time() - t0)
-        floor = round(min(walls), 3)
-    except Exception as e:
-        errors["per_query_floor"] = f"{type(e).__name__}: {e}"
+    floor = floor_probe(spark, sf_dir, errors)
     # Echo the EFFECTIVE session geometry (VERDICT r13 item 2 / next-
     # round 2): the driver's low-core control run inferred whether
     # SPARK_GRAFT_CPUS was honored from per-query walls alone and

@@ -17,9 +17,12 @@ from pyspark.sql import functions as F
 from ask_duckdb_spark.operators.dedup import (
     MAX_BUCKET,
     _banded,
+    _jaccard_filtered,
+    _neardup_pairs_from_signatures,
     lsh_candidate_pairs,
     minhash_signatures,
 )
+from tests.conftest import SF_DIR
 
 
 def _reference_pairs(sig, id_col: str):
@@ -104,3 +107,28 @@ def test_pairing_drops_degenerate_buckets(spark):
     sig2 = minhash_signatures(few, "doc_id", "text").persist()
     assert lsh_candidate_pairs(sig2, "doc_id").count() == 10  # C(5,2)
     sig2.unpersist()
+
+
+def test_x2_est_early_path_matches_sig_carrying_path(spark):
+    """x2's r13 pair path (estimate computed inside the pair lambda,
+    scalar-only dedup) must produce exactly the rows of the reference
+    sig-carrying path (lsh_candidate_pairs -> zip_with estimate)."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    sig = minhash_signatures(docs, "doc_id", "text").persist()
+    try:
+        got = {
+            (r.id_a, r.id_b, r.jaccard_est)
+            for r in _neardup_pairs_from_signatures(sig).collect()
+        }
+        want = {
+            (r.id_a, r.id_b, r.jaccard_est)
+            for r in _jaccard_filtered(
+                lsh_candidate_pairs(sig, "doc_id")
+            ).collect()
+        }
+    finally:
+        sig.unpersist()
+    assert got == want
+    assert want, "vacuous pair set"
