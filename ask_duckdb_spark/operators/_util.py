@@ -115,6 +115,23 @@ def unpersist_with(result: DataFrame, cached: DataFrame) -> DataFrame:
     return result
 
 
+def release(df: DataFrame) -> None:
+    """Free a frame's blocks now, whether it was persisted or checkpointed.
+
+    A ``localCheckpoint`` frame's plan is a ``LogicalRDD`` whose RDD
+    holds the blocks; ``DataFrame.unpersist()`` and ``clearCache()``
+    do not see them, so without this they wait for ContextCleaner GC.
+    Release only a frame nothing reads any more: a released checkpoint
+    fails on read (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), it does not
+    recompute.
+    """
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
+
+
 def widen(df: DataFrame) -> DataFrame:
     """Repartition to the core count when the scan under-partitions.
 

@@ -32,7 +32,7 @@ from ..functions.porthash import (
 )
 from ..functions.text import char_ngrams, tokens
 from ..sources.catalog import load_table
-from ._util import floor_round, floor_round_sql, unpersist_with, widen
+from ._util import floor_round, floor_round_sql, release, unpersist_with, widen
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -782,13 +782,13 @@ def _min_label_components(pairs: DataFrame, who: str = "x29") -> DataFrame:
             .count()
         )
         prev, labels = labels, new_labels
-        prev.unpersist()  # no-op once prev is a checkpointed frame
+        release(prev)  # read by nothing now: new_labels is materialized
         if changed == 0:
             converged = True
             break
     edges.unpersist()
     if not converged:
-        labels.unpersist()  # don't leak the last round's cache on error
+        release(labels)  # don't leak the last round's blocks on error
         raise RuntimeError(
             f"{who} label propagation did not converge in 25 rounds —"
             " a component with diameter > 25 (pathological chain);"
@@ -1690,14 +1690,14 @@ def x80_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the plan nesting all prior rounds
         nxt = _small_star(_large_star(sym)).localCheckpoint(eager=True)
         cs = _checksum(nxt)
-        e.unpersist()
+        release(e)  # read by nothing now: nxt is materialized
         e = nxt
         if cs == prev_cs:
             converged = True
             break
         prev_cs = cs
     if not converged:
-        e.unpersist()
+        release(e)
         raise RuntimeError(
             f"x80 star contraction did not converge in {CC_MAX_ROUNDS} "
             "rounds — raise CC_MAX_ROUNDS (needs ~log2 |V|)"

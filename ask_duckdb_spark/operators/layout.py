@@ -184,8 +184,11 @@ FROM customer t FULL OUTER JOIN src s ON t.c_custkey = s.k
 # stays map-side combinable; balances ride exact integer cents
 # (``bal_units``) until one identical closing division on both engines.
 # The source feeds three consumers (update join, touched semi, insert
-# anti), so callers persist it: without that each consumer re-ran the
-# orders scan + aggregate (measured 12-exchange plan at sf0.1x10).
+# anti), so callers materialize it once: without that each consumer
+# re-ran the orders scan + aggregate (measured 12-exchange plan at
+# sf0.1x10). x116 persists it, because registry builders stay lazy;
+# the CDC apply runs eagerly and checkpoints it, which spares AQE's
+# per-consumer cache-stage jobs.
 
 
 def merge_source(orders: DataFrame) -> DataFrame:
@@ -218,42 +221,43 @@ def cents_state(customer: DataFrame) -> DataFrame:
     )
 
 
+#: The schema :func:`cents_state` produces, so a snapshot of it is read
+#: without inferring the schema from a parquet footer.
+STATE_SCHEMA = (
+    "c_custkey BIGINT, c_name STRING, c_nationkey INT, bal_units BIGINT,"
+    " c_mktsegment STRING"
+)
+
+# update and keep: one broadcast left join, target streamed. insert:
+# the target is semi-reduced against the broadcast source first, so the
+# anti-join's build side is batch-sized — the target itself is never a
+# join build side and never shuffles.
+_MERGE_SQL = """
+SELECT t.c_custkey, t.c_name, CAST(t.c_nationkey AS INT) AS c_nationkey,
+       coalesce(t.bal_units, 0) + coalesce(s.delta_units, 0) AS bal_units,
+       t.c_mktsegment
+FROM {t} t LEFT JOIN {s} s ON t.c_custkey = s.k
+UNION ALL
+SELECT s.k AS c_custkey, concat('Customer#new#', CAST(s.k AS STRING)) AS c_name,
+       CAST(-1 AS INT) AS c_nationkey, s.delta_units AS bal_units,
+       'UNKNOWN' AS c_mktsegment
+FROM {s} s LEFT ANTI JOIN (
+  SELECT tt.c_custkey AS k FROM {t} tt LEFT SEMI JOIN {s} ss ON tt.c_custkey = ss.k
+) touched ON s.k = touched.k
+"""
+
+
 def merge_cents(target: DataFrame, src: DataFrame) -> DataFrame:
     """MERGE ``src`` into a :func:`cents_state` target, in cents.
 
     WHEN MATCHED THEN UPDATE (balance += delta), WHEN NOT MATCHED BY
     SOURCE THEN keep, WHEN NOT MATCHED THEN INSERT a synthesized row —
-    the full MERGE matrix, planned as the decomposition above.
+    the full MERGE matrix, planned as the decomposition above and
+    analyzed once as one statement. The statement's temp views are
+    dropped on return, which uncaches a persisted ``src``: persist it
+    after this call, not before.
     """
-    # update and keep: one broadcast left join, target streamed
-    upd = target.alias("t").join(
-        src.alias("s"), F.col("t.c_custkey") == F.col("s.k"), "left"
-    ).select(
-        F.col("t.c_custkey").alias("c_custkey"),
-        F.col("t.c_name").alias("c_name"),
-        F.col("t.c_nationkey").cast("int").alias("c_nationkey"),
-        (
-            F.coalesce(F.col("t.bal_units"), F.lit(0))
-            + F.coalesce(F.col("s.delta_units"), F.lit(0))
-        ).alias("bal_units"),
-        F.col("t.c_mktsegment").alias("c_mktsegment"),
-    )
-    # insert: the target is semi-reduced against the broadcast source
-    # first, so the anti-join's build side is batch-sized — the target
-    # itself is never a join build side and never shuffles
-    touched = target.select(F.col("c_custkey").alias("k")).join(
-        src.select("k"), "k", "left_semi"
-    )
-    ins = src.join(touched, "k", "left_anti").select(
-        F.col("k").alias("c_custkey"),
-        F.concat(F.lit("Customer#new#"), F.col("k").cast("string")).alias(
-            "c_name"
-        ),
-        F.lit(-1).cast("int").alias("c_nationkey"),
-        F.col("delta_units").alias("bal_units"),
-        F.lit("UNKNOWN").alias("c_mktsegment"),
-    )
-    return upd.unionByName(ins)
+    return target.sparkSession.sql(_MERGE_SQL, t=target, s=src)
 
 
 def dollars_view(state: DataFrame) -> DataFrame:
@@ -281,8 +285,9 @@ def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     src = merge_source(
         o.filter(F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-    ).persist()
-    return unpersist_with(dollars_view(merge_cents(cents_state(c), src)), src)
+    )
+    merged = merge_cents(cents_state(c), src)
+    return unpersist_with(dollars_view(merged), src.persist())
 
 
 # ---------------------------------------------------------------------------

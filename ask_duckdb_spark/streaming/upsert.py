@@ -26,10 +26,13 @@ streaming-MERGE sink:
   rows are stable under later updates.
 
 Scale (100 TB): each micro-batch costs one map-side-combinable source
-aggregate plus two STREAMING scans of the current snapshot (zero
-snapshot exchanges; a bucketed/clustered snapshot additionally turns
-the rewrite into touched-file surgery), and version GC keeps the
-last K snapshots (time travel for free). A real deployment swaps the
+aggregate, checkpointed once for its three consumers, three broadcasts
+of it and one write: 7 Spark jobs, counting the read of the batch
+itself. The snapshot is read with its known schema (no footer
+inference job) in two STREAMING scans (zero snapshot exchanges; a
+bucketed/clustered snapshot additionally turns the rewrite into
+touched-file surgery), and version GC keeps the last K snapshots (time
+travel for free). A real deployment swaps the
 directory-versioning for a table format's atomic commit; the PLAN per
 batch is identical.
 """
@@ -40,7 +43,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.layout import cents_state, merge_cents, merge_source
+from ..operators._util import release
+from ..operators.layout import STATE_SCHEMA, cents_state, merge_cents, merge_source
 from ..operators.layout import dollars_view as final_view
 
 __all__ = ["upsert_apply", "start_upsert_apply", "current_state", "final_view"]
@@ -64,16 +68,17 @@ def upsert_apply(
     Separated from the stream wiring (novelty_ingest discipline):
     testable batch-by-batch, reusable from any incremental driver.
     """
-    # src is micro-batch-sized by construction; persisted for its three
-    # consumers and released right after the eager snapshot write
-    src = merge_source(batch_df).persist()
+    prev = spark.read.schema(STATE_SCHEMA).parquet(_vdir(target_dir, batch_id))
+    # src is micro-batch-sized by construction; checkpointed once for its
+    # three consumers (under persist, AQE runs a cache-stage job per
+    # consumer) and released right after the eager snapshot write
+    src = merge_source(batch_df).localCheckpoint(eager=True)
     try:
-        prev = spark.read.parquet(_vdir(target_dir, batch_id))
         merge_cents(prev, src).write.mode("overwrite").parquet(
             _vdir(target_dir, batch_id + 1)
         )
     finally:
-        src.unpersist()
+        release(src)
 
 
 def current_state(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -81,7 +86,7 @@ def current_state(spark: SparkSession, target_dir: str) -> DataFrame:
     versions = sorted(
         int(d[1:]) for d in os.listdir(target_dir) if d.startswith("v")
     )
-    return spark.read.parquet(_vdir(target_dir, versions[-1]))
+    return spark.read.schema(STATE_SCHEMA).parquet(_vdir(target_dir, versions[-1]))
 
 
 def start_upsert_apply(
@@ -102,7 +107,9 @@ def start_upsert_apply(
         bootstrap(customer_df, target)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_apply(spark, batch_df, target, batch_id)
+        # foreachBatch hands each batch a cloned session; the merge is
+        # one statement over both frames, so it must run in that session
+        upsert_apply(batch_df.sparkSession, batch_df, target, batch_id)
 
     w = (
         orders_stream.writeStream.foreachBatch(process)

@@ -37,3 +37,9 @@ def queuedata(spark):
     df = queuedata_df(spark)
     df.createOrReplaceTempView("queuedata")
     return df, queuedata_dictionary()
+
+
+def persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs the context holds blocks for (persisted frames and
+    local checkpoints alike)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())

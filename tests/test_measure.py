@@ -5,7 +5,7 @@ from __future__ import annotations
 import importlib.util
 import os
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, persisted_rdds
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -21,8 +21,7 @@ def _measure_module():
 
 def test_sweep_records_layers_and_releases_caches(spark):
     measure = _measure_module()
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(persisted().keys())
+    before = persisted_rdds(spark)
     names = ["g1_count_star", "no_such_entry", "x116_merge_upsert"]
     recs = list(measure.measure(spark, SF_DIR, names, reps=2))
     assert [r["name"] for r in recs] == names
@@ -37,7 +36,7 @@ def test_sweep_records_layers_and_releases_caches(spark):
         for phase in ("analysis", "optimization", "planning"):
             assert f"phase_{phase}_ms" in layers, rec
     # x116 persists its MERGE source; every rep released it
-    assert set(persisted().keys()) <= before
+    assert persisted_rdds(spark) <= before
 
 
 def test_profile_writes_plan_file(spark, tmp_path):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from ask_duckdb_spark.operators import QUERIES
-from tests.conftest import SF_DIR_001
+from tests.conftest import SF_DIR, SF_DIR_001, persisted_rdds
 
 
 @pytest.fixture(scope="module")
@@ -524,3 +524,14 @@ def test_triangle_census_ivf_diagnostic_parity_vs_banded(spark):
         abs(ivf.global_cc_ppm - banded.global_cc_ppm)
         <= 0.10 * banded.global_cc_ppm
     )
+
+
+@pytest.mark.parametrize("name", ["x29_dedup_clusters", "x80_cc_star"])
+def test_cc_build_releases_spent_rounds(spark, name):
+    """Each fixpoint round releases the previous round's checkpoint once
+    the next is materialized: a build keeps only the frame its result
+    reads, however many rounds it ran."""
+    before = persisted_rdds(spark)
+    out = QUERIES[name](spark, SF_DIR)
+    assert len(persisted_rdds(spark) - before) <= 1
+    assert out.count() > 0

@@ -10,17 +10,23 @@ the first place, applied across TIME instead of across partitions.
 
 A second test replays a batch (at-least-once delivery) and asserts the
 snapshot it produces is unchanged — the version-from-batch-id rule
-gives exactly-once effect.
+gives exactly-once effect. The rest pin the apply's cost and hygiene:
+its Spark job budget, that it releases its checkpointed source on every
+path, and that snapshots are read with the schema they were written in.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ask_duckdb_spark.operators import QUERIES
+from ask_duckdb_spark.operators.layout import STATE_SCHEMA, cents_state
 from ask_duckdb_spark.sources.catalog import load_table
+from ask_duckdb_spark.streaming import upsert
 from ask_duckdb_spark.streaming.upsert import (
     bootstrap,
     current_state,
@@ -28,7 +34,7 @@ from ask_duckdb_spark.streaming.upsert import (
     start_upsert_apply,
     upsert_apply,
 )
-from tests.conftest import SF_DIR_001
+from tests.conftest import SF_DIR, SF_DIR_001, persisted_rdds
 
 
 def _rows(df):
@@ -38,8 +44,8 @@ def _rows(df):
     )
 
 
-def _src_orders(spark):
-    return load_table(spark, SF_DIR_001, "orders").filter(
+def _src_orders(spark, sf_dir=SF_DIR_001):
+    return load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp")
     )
 
@@ -90,3 +96,66 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     assert first == again
     # and the one-shot apply already equals batch x116
     assert again == _rows(QUERIES["x116_merge_upsert"](spark, SF_DIR_001))
+
+
+def _snapshot(spark, target, version):
+    return _rows(
+        final_view(spark.read.parquet(os.path.join(target, f"v{version:05d}")))
+    )
+
+
+def _bootstrapped(spark, tmp_path):
+    target = str(tmp_path / "target")
+    bootstrap(load_table(spark, SF_DIR, "customer"), target)
+    return target
+
+
+def test_state_schema_matches_cents_state(spark):
+    """Snapshots are read with STATE_SCHEMA, not their footers: if it
+    drifts from what cents_state writes, fail here rather than misread."""
+    got = cents_state(load_table(spark, SF_DIR, "customer")).schema
+    want = spark.createDataFrame([], STATE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in want
+    ]
+
+
+def test_upsert_apply_job_budget(spark, tmp_path):
+    """One micro-batch costs 6 Spark jobs once its batch frame exists:
+    the source checkpoint, three broadcasts of it and the snapshot
+    write (9 when the source was persisted and the snapshot schema
+    inferred). Its checkpoint is released: no persisted RDD remains."""
+    target = _bootstrapped(spark, tmp_path)
+    upsert_apply(spark, _src_orders(spark, SF_DIR), target, 0)  # warm-up
+    batch = _src_orders(spark, SF_DIR)
+    before = persisted_rdds(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_budget", "upsert_budget")
+    try:
+        upsert_apply(spark, batch, target, 1)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("upsert_budget")) <= 6
+    assert persisted_rdds(spark) <= before
+
+
+def test_failed_upsert_apply_leaves_no_persisted_rdd(spark, tmp_path, monkeypatch):
+    target = _bootstrapped(spark, tmp_path)
+    before = persisted_rdds(spark)
+    with pytest.raises(AnalysisException):  # no parent version to merge into
+        upsert_apply(spark, _src_orders(spark, SF_DIR), target, 3)
+    assert persisted_rdds(spark) <= before
+
+    def failing_merge(target, src):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(upsert, "merge_cents", failing_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        upsert_apply(spark, _src_orders(spark, SF_DIR), target, 0)
+    assert persisted_rdds(spark) <= before
+
+
+def test_empty_micro_batch_keeps_the_snapshot(spark, tmp_path):
+    target = _bootstrapped(spark, tmp_path)
+    upsert_apply(spark, _src_orders(spark, SF_DIR).limit(0), target, 0)
+    assert _snapshot(spark, target, 1) == _snapshot(spark, target, 0)
