@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from .registry import query
 
 #: (column, kind) of the profiled table — lineitem, the biggest
@@ -269,8 +269,8 @@ def x108_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def ring_assign(tag: str, n_shards: int):
-        ring = spark.createDataFrame(
-            _vnode_positions(n_shards), "shard int, vpos long"
+        ring = local_frame(
+            spark, _vnode_positions(n_shards), "shard int, vpos long"
         )
         pick = (
             dpos.crossJoin(F.broadcast(ring))

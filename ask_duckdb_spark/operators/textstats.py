@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 from ._util import floor_round, floor_round_sql
 from .registry import query
 
@@ -1699,8 +1699,8 @@ def x67_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab.unpersist()
         if prev is not None:
             prev.unpersist()
-    return spark.createDataFrame(
-        merges, "merge_rank INT, lhs STRING, rhs STRING, freq BIGINT"
+    return local_frame(
+        spark, merges, "merge_rank INT, lhs STRING, rhs STRING, freq BIGINT"
     )
 
 

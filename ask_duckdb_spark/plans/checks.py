@@ -24,6 +24,7 @@ __all__ = [
     "has_take_ordered",
     "has_partial_aggregate",
     "wholestage_codegen_count",
+    "has_rdd_scan",
 ]
 
 
@@ -115,3 +116,13 @@ def wholestage_codegen_count(df: DataFrame) -> int:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     m = re.search(r"Found (\d+) WholeStageCodegen subtrees", text)
     return int(m.group(1)) if m else 0
+
+
+def has_rdd_scan(df: DataFrame) -> bool:
+    """True when the executed plan scans an RDD (``ExistingRDD``).
+
+    A frame built from a Python list is one: each scan of it runs
+    Python workers to unpickle the rows. Rows built in Python belong in a
+    LocalRelation (``sources.catalog.local_frame``), scanned in the JVM.
+    """
+    return "ExistingRDD" in df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001

@@ -11,14 +11,20 @@ Scale notes (100 TB posture):
   partitioned directory tree (``dt=.../part-*.parquet``) unchanged.
 - The only per-table fixup (events.ts ns->us) is a zero-shuffle
   projection, fused into the scan stage by whole-stage codegen.
+- Small tables built in Python (the queuedata fixture, ring and
+  merge lists) go through :func:`local_frame`: an Arrow LocalRelation
+  the JVM scans itself, never a Python RDD.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Mapping, Sequence
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import apply_runtime_conf
 
@@ -105,3 +111,34 @@ def register_views(
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Mapping[str, Any] | Sequence[Any]],
+    schema: str,
+) -> DataFrame:
+    """A frame over rows built in Python, as an Arrow LocalRelation.
+
+    ``spark.createDataFrame(python_list, schema)`` is a Python RDD
+    (``parallelize`` + ``applySchemaToPythonRDD``): every scan of it
+    re-runs Python workers to unpickle the rows, one per partition, on
+    every query. An Arrow table instead becomes a LocalRelation: the
+    rows live in the plan, Catalyst folds filters and projections into
+    it, and the scan is a JVM ``LocalTableScan`` with no Python worker,
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    ``rows`` are dicts keyed by column name or tuples in schema order;
+    the DDL ``schema`` is the frame's schema exactly, nullability
+    included. An empty ``rows`` gives an empty frame of that schema.
+    """
+    # imported here: sessions that never build a local frame skip pyarrow
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, Mapping) else dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, schema=struct)

@@ -15,6 +15,12 @@ model — enough columns to replay all three README examples
 
 Everything is derived from row index ``i`` — no RNG, stable across
 sessions and engines.
+
+The frame is built with ``sources.catalog.local_frame``. A Python
+list handed to ``createDataFrame`` becomes a Python RDD, and every scan
+of it re-runs Python workers to unpickle the 60 rows (four worker tasks
+per question over queuedata). An Arrow table becomes a LocalRelation:
+the rows sit in the plan and the JVM scans them (``LocalTableScan``).
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .catalog import local_frame
 
 __all__ = ["queuedata_rows", "queuedata_df", "queuedata_dictionary"]
 
@@ -77,7 +85,7 @@ _SCHEMA = (
 
 
 def queuedata_df(spark: SparkSession, n: int = N_ROWS) -> DataFrame:
-    return spark.createDataFrame(queuedata_rows(n), schema=_SCHEMA)
+    return local_frame(spark, queuedata_rows(n), _SCHEMA)
 
 
 def queuedata_dictionary() -> dict[str, Any]:

@@ -48,6 +48,7 @@ from ..operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures_fast,
 )
+from ..sources.catalog import local_frame
 
 __all__ = ["neardup_ingest", "start_neardup_ingest"]
 
@@ -109,7 +110,7 @@ def neardup_ingest(
             .distinct()
         )
     else:
-        cross = spark.createDataFrame([], "doc_id bigint")
+        cross = local_frame(spark, [], "doc_id bigint")
 
     # --- in-batch drops: lower-id wins (arrival order within batch) ---
     inbatch = (

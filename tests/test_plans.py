@@ -4,11 +4,23 @@ broke pushdown/broadcast/top-k/pruning even if results stay correct."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
+
+from pyspark.sql.types import StructType
 
 from ask_duckdb_spark.operators import QUERIES
 from ask_duckdb_spark.plans import checks
+from ask_duckdb_spark.sources.catalog import local_frame
+from ask_duckdb_spark.sources.queuedata_fixture import (
+    _SCHEMA,
+    queuedata_df,
+    queuedata_rows,
+)
 from tests.conftest import SF_DIR
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "ask_duckdb_spark"
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -529,3 +541,59 @@ def test_x2_exchange_budget(spark):
     n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
     # scan -> widen -> members -> dedup (+ output range partition)
     assert n_ex <= 4, plan
+
+
+def _local_scan_only(df) -> bool:
+    return "LocalTableScan" in checks.formatted_plan(df) and not checks.has_rdd_scan(df)
+
+
+def test_queuedata_fixture_is_a_local_relation(spark):
+    """The queuedata fixture is a LocalRelation with the fixture's exact
+    schema and rows: a question over it plans as a JVM LocalTableScan,
+    never a Python-worker scan of an RDD — with Arrow conversion off
+    too, since an Arrow table takes that path regardless."""
+    prev = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    try:
+        df = queuedata_df(spark)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev)
+    assert df.schema == StructType.fromDDL(_SCHEMA)
+    assert all(f.nullable for f in df.schema)
+    assert [r.asDict() for r in df.collect()] == queuedata_rows()
+    assert _local_scan_only(df.filter("status = 'online'").select("queue"))
+
+
+def test_local_frame_tuples_and_empty_plan_as_local_scans(spark):
+    ring = local_frame(spark, [(0, 7), (1, 3)], "shard int, vpos long")
+    assert ring.schema == StructType.fromDDL("shard int, vpos long")
+    assert [tuple(r) for r in ring.collect()] == [(0, 7), (1, 3)]
+    assert _local_scan_only(ring.filter("vpos > 4").select("shard"))
+    empty = local_frame(spark, [], "doc_id bigint")
+    assert empty.schema == StructType.fromDDL("doc_id bigint")
+    assert empty.collect() == []
+    assert _local_scan_only(empty)
+    # x108's vnode rings, the operator-side user of the tuple form
+    assert _local_scan_only(QUERIES["x108_reshard_audit"](spark, SF_DIR))
+
+
+def test_python_rows_become_frames_only_through_local_frame():
+    """``createDataFrame(python_list)`` is a Python RDD; the package
+    builds every frame from Python rows with ``local_frame``, whose
+    body holds the one ``createDataFrame`` call."""
+    calls = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef):
+                for node in ast.walk(fn):
+                    owner.setdefault(node, fn.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                calls.append((path.relative_to(PKG).as_posix(), owner.get(node)))
+    assert calls == [("sources/catalog.py", "local_frame")]
