@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import sys
 
 from ..nl.ask import answer_question
 from ..nl.dictionary import load_dictionary, make_skeleton, write_dictionary
@@ -43,7 +44,11 @@ def main(argv: list[str] | None = None) -> None:
                     help=f"Parquet table directory (default: {DEFAULT_SF_DIR})")
     ap.add_argument("--table", default="queuedata",
                     help="Target table name (default: queuedata)")
-    ap.add_argument("--question", help="Natural-language question to turn into SQL.")
+    asked = ap.add_mutually_exclusive_group()
+    asked.add_argument("--question", help="Natural-language question to turn into SQL.")
+    asked.add_argument("--questions-file", metavar="PATH",
+                       help="Answer every question in PATH (one per line, blank"
+                            " lines skipped) in one session.")
     ap.add_argument("--llm", choices=["gemini", "mistral", "stub"], default="gemini",
                     help="LLM provider.")
     ap.add_argument("--model", help="Model name (e.g. gemini-2.5-flash).")
@@ -81,8 +86,19 @@ def main(argv: list[str] | None = None) -> None:
         print(f"Wrote schema skeleton to: {out_path}")
         return
 
-    if not args.question:
-        fail(EXIT_MISSING, "Error: --question is required unless --generate-schema is used.")
+    if args.questions_file:
+        try:
+            with open(args.questions_file) as f:
+                questions = [q.strip() for q in f if q.strip()]
+        except OSError as e:
+            fail(EXIT_MISSING, f"Error reading --questions-file: {e}")
+        if not questions:
+            fail(EXIT_MISSING, f"Error: no questions in {args.questions_file}.")
+    elif args.question:
+        questions = [args.question]
+    else:
+        fail(EXIT_MISSING, "Error: --question or --questions-file is required"
+                          " unless --generate-schema is used.")
 
     stub = StubLLM(default=args.stub_sql or "") if args.llm == "stub" else None
     # The LLM-failure handler is scoped to the LLM boundary ONLY —
@@ -95,27 +111,48 @@ def main(argv: list[str] | None = None) -> None:
         provider = get_provider(args.llm, stub=stub)
     except Exception as e:
         fail(EXIT_LLM_FAIL, f"[{args.llm.capitalize()} call failed] {e}")
+
+    # One session answers every question: the JVM start and the catalog
+    # set-up are paid once. A failed question prints its error and the
+    # loop goes on; the exit code is the first failure's.
+    first_failure = 0
+    for i, question in enumerate(questions, 1):
+        if args.questions_file:
+            print(f"=== Question {i}: {question} ===")
+        code = _answer(spark, args, provider, meta, question)
+        first_failure = first_failure or code
+    if first_failure:
+        sys.exit(first_failure)
+
+
+def _answer(spark, args, provider, meta, question: str) -> int:
+    """Answer one question and print it; return its exit code (0, 3, 4),
+    with any error printed to stderr."""
     try:
         res = answer_question(
-            spark, args.table, args.question, provider, meta=meta, model=args.model
+            spark, args.table, question, provider, meta=meta, model=args.model
         )
     except LLMCallError as e:
-        fail(EXIT_LLM_FAIL, f"[{args.llm.capitalize()} call failed] {e}")
+        return _error(EXIT_LLM_FAIL, f"[{args.llm.capitalize()} call failed] {e}")
     except Exception as e:
         # execute_with_repair tags gate and engine errors with the SQL it
         # last tried; an untagged error is a bug and keeps its traceback
         if not hasattr(e, "sql"):
             raise
         print(f"=== Cleaned SQL ===\n{e.sql}")
-        fail(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
+        return _error(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
 
     print(f"=== Cleaned SQL ===\n{res.sql}")
     try:
         display_result(res.df, max_rows=args.max_rows)
-    except SystemExit:
-        raise
     except Exception as e:  # engine boundary (reference: query_llm.py:401-403)
-        fail(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
+        return _error(EXIT_SQL_FAIL, f"[SQL execution failed] {e}")
+    return 0
+
+
+def _error(code: int, message: str) -> int:
+    print(message, file=sys.stderr)
+    return code
 
 
 if __name__ == "__main__":

@@ -23,8 +23,9 @@ RUNTIME_CONF: dict[str, str] = {
     # DuckDB timestamps are timezone-naive; pin UTC so TimestampType
     # round-trips match (see pyspark guide "Pitfalls").
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet stores INT64 TIMESTAMP(NANOS) which vanilla Spark
-    # refuses; read as long and convert in the catalog loader.
+    # A user's INT64 TIMESTAMP(NANOS) column, which vanilla Spark
+    # refuses, reads as long; the catalog loader converts events.ts.
+    # The fixtures store micros (TIMESTAMP_NTZ) and never need it.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # DuckDB identifiers are case-insensitive; Spark's default matches,
     # pin it anyway (SURVEY.md §7.3.3).

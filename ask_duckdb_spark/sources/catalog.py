@@ -9,8 +9,12 @@ Scale notes (100 TB posture):
 - ``spark.read.parquet`` gives vectorized scans, predicate pushdown and
   column pruning for free; at cluster scale the same loader works on a
   partitioned directory tree (``dt=.../part-*.parquet``) unchanged.
-- The only per-table fixup (events.ts ns->us) is a zero-shuffle
-  projection, fused into the scan stage by whole-stage codegen.
+- A fixture file is read with the schema its footer pins (pyarrow
+  reads the footer in-process): registering the catalog runs no Spark
+  job, as opening a DuckDB database scans no data.
+- The only per-table fixup (a user's nanosecond events.ts -> micros)
+  is a zero-shuffle projection, fused into the scan stage by
+  whole-stage codegen.
 - Small tables built in Python (the queuedata fixture, ring and
   merge lists) go through :func:`local_frame`: an Arrow LocalRelation
   the JVM scans itself, never a Python RDD.
@@ -24,7 +28,19 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from ..session import apply_runtime_conf
 
@@ -48,10 +64,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing physical quirks.
 
-    ``events.ts`` is INT64 TIMESTAMP(NANOS) in the footer; Spark reads
-    it as long under ``nanosAsLong`` and we convert to TIMESTAMP_NTZ at
-    microsecond precision (integer division — no float round-trip), the
-    same naive-timestamp semantics DuckDB exposes.
+    A ``{name}.parquet`` file is read with the schema its footer pins
+    (:func:`footer_schema`): pyarrow reads the footer in-process, so
+    the load runs no Spark job. Spark's own inference runs one schema job
+    per table; it stays the fallback for a directory-form table, a
+    footer type outside the fixture map, and the ``catalog:`` scheme.
+    Every fixture stores ``events.ts`` as TIMESTAMP(MICROS,
+    isAdjustedToUTC=false), which both paths read as TIMESTAMP_NTZ.
 
     The resolved reader DataFrame is memoized per (session, dir, table):
     the data model is read-only/immutable (the reference opens its
@@ -82,18 +101,61 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = cache.get(key)
     if hit is not None:
         return hit
-    df = _events_fixup(
-        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name
-    )
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path) if os.path.isfile(path) else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = _events_fixup(reader.parquet(path), name)
     cache[key] = df
     return df
 
 
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The Spark schema of one parquet file, mapped from its footer.
+
+    Gives what Spark's file-source inference gives (every field
+    nullable) for the types the fixtures hold, and ``None`` for any
+    other type (nanosecond timestamps, decimals, maps, structs, ...):
+    the caller then infers. A file that is not parquet raises here.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    arrow = pq.read_schema(path)
+    infer_ntz = spark.conf.get(_INFER_NTZ).lower() == "true"
+    fields = []
+    for field in arrow:
+        t = field.type
+        spark_type: DataType | None
+        if pa.types.is_timestamp(t) and t.unit == "us":
+            naive = t.tz is None and infer_ntz
+            spark_type = TimestampNTZType() if naive else TimestampType()
+        elif pa.types.is_list(t) and pa.types.is_float32(t.value_type):
+            spark_type = ArrayType(FloatType(), containsNull=True)
+        else:
+            spark_type = _FOOTER_TYPES.get(str(t))
+        if spark_type is None:
+            return None
+        fields.append(StructField(field.name, spark_type, nullable=True))
+    return StructType(fields)
+
+
+#: Footer (pyarrow) types mapped to Spark's; any other type infers.
+_FOOTER_TYPES: dict[str, DataType] = {
+    "int32": IntegerType(),
+    "int64": LongType(),
+    "double": DoubleType(),
+    "float": FloatType(),
+    "string": StringType(),
+}
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+
 def _events_fixup(df: DataFrame, name: str) -> DataFrame:
-    """events.ts arrives INT64 TIMESTAMP(NANOS) (read as long under
-    nanosAsLong): convert to microsecond TIMESTAMP_NTZ by integer
-    division — one conversion shared by the parquet and catalog
-    resolution paths."""
+    """A user's ``events.ts`` stored as INT64 TIMESTAMP(NANOS) is read
+    as long under ``nanosAsLong``: convert it to microsecond
+    TIMESTAMP_NTZ by integer division — one conversion shared by the
+    parquet and catalog resolution paths. The fixtures store micros
+    and never take this branch."""
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")

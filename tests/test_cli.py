@@ -251,3 +251,51 @@ def test_ask_failed_sql_is_exit_4_and_printed(spark, capsys, stub_sql, error):
     captured = capsys.readouterr()
     assert f"=== Cleaned SQL ===\n{stub_sql}\n" in captured.out
     assert error in captured.err
+
+
+def test_ask_questions_file_one_session(spark, tmp_path, monkeypatch, capsys):
+    """--questions-file answers every question after one open_source;
+    a failed question prints its error, the next one is still answered,
+    and the exit code is the failure's."""
+    from ask_duckdb_spark.nl.llm import StubLLM
+
+    opened = []
+
+    def counted_open_source(*args):
+        opened.append(args)
+        return open_source(*args)
+
+    open_source = cli_ask.open_source
+    monkeypatch.setattr(cli_ask, "open_source", counted_open_source)
+    monkeypatch.setattr(cli_ask, "get_provider", lambda name, stub=None: StubLLM({
+        "broken": "SELECT no_such_column FROM queuedata",
+        "online": "SELECT name FROM queuedata WHERE LOWER(state) = 'ONLINE'",
+    }))
+    questions = tmp_path / "questions.txt"
+    questions.write_text("list all queues that are online\n\n  \nbroken question\n")
+    code = exit_code(
+        cli_ask.main,
+        ["--sf-dir", SF_DIR, "--with-queuedata-fixture", "--llm", "stub",
+         "--questions-file", str(questions)],
+    )
+    assert code == 4
+    assert len(opened) == 1
+    captured = capsys.readouterr()
+    out = captured.out
+    assert out.index("=== Question 1: list all queues that are online ===") < out.index(
+        "SELECT queue FROM queuedata WHERE LOWER(status) ='online'") < out.index(
+        "=== Query result (") < out.index("=== Question 2: broken question ===") < out.index(
+        "=== Cleaned SQL ===\nSELECT no_such_column FROM queuedata\n")
+    assert "=== Question 3" not in out
+    assert "[SQL execution failed]" in captured.err
+
+
+def test_ask_questions_file_excludes_question(spark, tmp_path, capsys):
+    questions = tmp_path / "questions.txt"
+    questions.write_text("anything\n")
+    assert exit_code(
+        cli_ask.main,
+        ["--sf-dir", SF_DIR, "--llm", "stub", "--question", "anything",
+         "--questions-file", str(questions)],
+    ) == 2
+    assert "not allowed with argument" in capsys.readouterr().err

@@ -49,10 +49,9 @@ def _run_stream(spark, build, schema_src, stream_path):
 
 @pytest.fixture(scope="module")
 def raw_events(spark):
-    # the streaming source reads the parquet directly (ts arrives as
-    # bigint nanos under nanosAsLong) — apply the same catalog fixup
-    import pyspark.sql.functions as F
-
+    # the streaming source reads the parquet directly: the fixtures store
+    # ts as TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives as
+    # timestamp_ntz, so _normalize's nanos fixup is a no-op on them
     df = spark.read.parquet(f"{SF_DIR}/events.parquet")
     return df
 
