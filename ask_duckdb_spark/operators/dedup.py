@@ -331,8 +331,8 @@ def _pairs_from_bands(bands: DataFrame, id_col: str) -> DataFrame:
     frame — the second half of :func:`lsh_candidate_pairs`, split out so
     an INCREMENTAL ingest can feed it a pruned band frame (persisted
     index rows for touched buckets ∪ the new batch's bands) instead of
-    re-banding the whole corpus (scripts/x140_trial.py's end-to-end
-    path). Skew/memory cap and dedup semantics identical to the full
+    re-banding the whole corpus (the incremental ingest path of
+    SCALE.md r9). Skew/memory cap and dedup semantics identical to the full
     path by construction."""
     return (
         _raw_sig_pairs(bands, id_col)
@@ -496,7 +496,7 @@ def _neardup_pairs_from_signatures(sig: DataFrame) -> DataFrame:
 def _jaccard_filtered(pairs: DataFrame) -> DataFrame:
     """Signature-estimated Jaccard >= 0.5 over a candidate-pair frame
     carrying sig_a/sig_b — shared by the full path and the incremental
-    probe (scripts/x140_trial.py)."""
+    probe (SCALE.md r9)."""
     # Verify candidates with estimated Jaccard from the signatures that
     # rode through the bucket join (no re-join, no re-shuffle of text).
     # Same estimator as the registered path (_sig_est — one
@@ -2342,7 +2342,7 @@ def x140_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses to ~2 because every old component is already a star.
     The batch cadence never re-shuffles the established corpus.
 
-    Measured boundary (SCALE.md r9, scripts/x140_trial.py): on SPARSE
+    Measured boundary (SCALE.md r9): on SPARSE
     dup graphs (edges < vertices — this corpus at every factor tried)
     the KERNEL-only win does not materialize, because the star set is
     one row per clustered doc and so exceeds the raw edge list it

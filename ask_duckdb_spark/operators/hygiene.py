@@ -142,23 +142,7 @@ def x133_eval_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     majority). The per-doc rollup is map-side combinable. Nothing in
     the plan holds corpus-sized state.
     """
-    d = load_table(spark, sf_dir, "documents")
-    # Filter each slice BEFORE gram construction so the cheap modulo
-    # predicate sits ahead of the expensive tokenize+hash conjunct in
-    # the fused scan Filter (Catalyst keeps conjunct order; the
-    # single-grams-frame formulation tokenized 90% of docs on the eval
-    # side only to drop them — plan-audited r7).
-    ev = _doc_grams(d.filter(F.col("doc_id") % EVAL_MOD == 0)).select("h").distinct()
-    return (
-        _doc_grams(d.filter(F.col("doc_id") % EVAL_MOD != 0))
-        .join(ev, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("h").cast("bigint").alias("n_shared_grams"),
-            F.count(F.lit(1)).cast("bigint").alias("n_gram_hits"),
-        )
-        .orderBy(F.desc("n_shared_grams"), "doc_id")
-    )
+    return _contaminated_docs(spark, sf_dir, broadcast=False)
 
 
 @query("x133b_eval_decontam_bcast", oracle=_X133_ORACLE)
@@ -178,11 +162,23 @@ def x133b_eval_decontam_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes in FRONT of this broadcast probe when even hashing the
     clean majority's grams is worth skipping.
     """
+    return _contaminated_docs(spark, sf_dir, broadcast=True)
+
+
+def _contaminated_docs(spark: SparkSession, sf_dir: str, broadcast: bool) -> DataFrame:
+    """x133's per-training-doc contamination rollup; ``broadcast``
+    ships the eval gram set to the join (x133b) instead of shuffling
+    both sides on the gram (x133)."""
     d = load_table(spark, sf_dir, "documents")
+    # Filter each slice BEFORE gram construction so the cheap modulo
+    # predicate sits ahead of the expensive tokenize+hash conjunct in
+    # the fused scan Filter (Catalyst keeps conjunct order; the
+    # single-grams-frame formulation tokenized 90% of docs on the eval
+    # side only to drop them — plan-audited r7).
     ev = _doc_grams(d.filter(F.col("doc_id") % EVAL_MOD == 0)).select("h").distinct()
     return (
         _doc_grams(d.filter(F.col("doc_id") % EVAL_MOD != 0))
-        .join(F.broadcast(ev), "h")
+        .join(F.broadcast(ev) if broadcast else ev, "h")
         .groupBy("doc_id")
         .agg(
             F.countDistinct("h").cast("bigint").alias("n_shared_grams"),

@@ -352,20 +352,77 @@ def x117_bloom_semijoin(
     broadcasting it costs 16 KB. False-positive rate at n build keys:
     (1 - e^{-kn/m})^k — so ``m_bits`` MUST grow with build cardinality
     (≈13 bits/key holds fp under 3% at k=3; the default 2^17 is sized
-    for the fixture's ~10^4 urgent orders and saturates at 100x —
-    scripts/scale_trial.py passes m_bits = 2^17 * factor, the same
-    stats-driven sizing Spark's own injected runtime filter performs).
+    for the fixture's ~10^4 urgent orders and saturates at 100x — the
+    100x trial in SCALE.md passed m_bits = 2^17 * factor, the same
+    stats-driven sizing Spark's own injected runtime filter performs;
+    a knobbed call voids the registered oracle).
     """
+    return _urgent_flag_totals(spark, sf_dir, m_bits)
+
+
+@query("x117b_plain_semijoin", oracle=_X117_ORACLE)
+def x117b_plain_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x117's semi-join WITHOUT the bloom pre-filter — the honest
+    fixture-scale winner, registered as a same-oracle twin (the
+    x133<->x133b discipline; VERDICT r8 item 4).
+
+    The r8 crossover trial (SCALE.md) measured the real trade: on
+    local[32] the plain left-semi runs 1.31 s at sf0.1 vs the bloom
+    form's 2.84 s, and the bloom's fixed build cost only amortizes
+    past ~x12-13 the fixture volume — AND the local testbed
+    structurally lacks the network shuffle the bloom exists to cut
+    (local "shuffle" is a page-cache copy, so plain-shuffle ~=
+    plain-broadcast there). This twin makes that a REGISTERED plan
+    choice: a deployment reads x117's docstring for the at-scale
+    insurance form and picks this one below the crossover, instead of
+    paying ~0.7 s of bloom build for nothing. Output is bit-identical
+    by construction (same oracle row pins both — tests/
+    test_layout_ops.py asserts row equality and the broadcast-semi
+    plan shape).
+
+    Scale (100 TB): the build side (urgent-order keys) broadcasts
+    while it fits (AQE decides); beyond that this becomes a shuffled
+    left-semi of the probe side — exactly the shuffle volume x117's
+    bloom filter cuts, which is the crossover at which a deployment
+    switches twins.
+    """
+    return _urgent_flag_totals(spark, sf_dir, None)
+
+
+def _urgent_flag_totals(
+    spark: SparkSession, sf_dir: str, m_bits: int | None
+) -> DataFrame:
+    """Per-flag totals of the lineitems of urgent orders: the exact
+    left-semi join behind x117 (a bloom pre-filter of ``m_bits`` bits
+    on the probe side) and x117b (``m_bits=None``, no pre-filter)."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # No .distinct() (r12): o_orderkey is the orders PK, and BOTH
-    # consumers of the build side are duplicate-insensitive anyway —
-    # bit_or aggregation (idempotent, map-side combining) and the
-    # exact left-semi. The dedup was a full extra shuffle + stage of
-    # pure waste.
+    # No .distinct() on the build side (r12): o_orderkey is the orders
+    # PK, and every consumer of the build side is duplicate-insensitive
+    # anyway — bit_or aggregation (idempotent, map-side combining) and
+    # the exact left-semi. The distinct was a full extra shuffle + stage
+    # of pure waste (measured at sf0.1x10: ~0.3 s of x117b's ~0.9 s
+    # wall). For a genuinely non-unique build key, dedup before a
+    # SHUFFLED semi-join is volume hygiene; before a broadcast it only
+    # shrinks the hash table the semi-join builds either way.
     build = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").alias("bk")
     )
+    probe = li if m_bits is None else _bloom_probe(li, build, m_bits)
+    return (
+        probe.join(build, probe["l_orderkey"] == build["bk"], "left_semi")
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_items"),
+            money(F.sum(rev_units()), 10000).alias("revenue"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+def _bloom_probe(li: DataFrame, build: DataFrame, m_bits: int) -> DataFrame:
+    """The lineitems whose ``l_orderkey`` passes a bloom filter of the
+    build keys ``bk``: a superset of the semi-join's rows."""
     # Bloom build: k hash positions per key -> OR-aggregated words.
     seeds = F.explode(F.array(*[F.lit(s) for s in range(_BLOOM_K)])).alias("seed")
     positions = build.select("bk", seeds).select(
@@ -394,68 +451,7 @@ def x117_bloom_semijoin(
             .join(F.broadcast(ws), F.col(f"_w{s}") == F.col(f"bw{s}"), "left")
             .filter((F.col(f"bb{s}").bitwiseAND(F.col(f"_m{s}"))) != 0)
         )
-    survivors = probe.select(li.columns)
-    exact = survivors.join(
-        build, survivors["l_orderkey"] == build["bk"], "left_semi"
-    )
-    return (
-        exact.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            money(F.sum(rev_units()), 10000).alias("revenue"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@query("x117b_plain_semijoin", oracle=_X117_ORACLE)
-def x117b_plain_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x117's semi-join WITHOUT the bloom pre-filter — the honest
-    fixture-scale winner, registered as a same-oracle twin (the
-    x133<->x133b discipline; VERDICT r8 item 4).
-
-    scripts/x117_crossover.py measured the real trade at r8: on
-    local[32] the plain left-semi runs 1.31 s at sf0.1 vs the bloom
-    form's 2.84 s, and the bloom's fixed build cost only amortizes
-    past ~x12-13 the fixture volume — AND the local testbed
-    structurally lacks the network shuffle the bloom exists to cut
-    (local "shuffle" is a page-cache copy, so plain-shuffle ~=
-    plain-broadcast there). This twin makes that a REGISTERED plan
-    choice: a deployment reads x117's docstring for the at-scale
-    insurance form and picks this one below the crossover, instead of
-    paying ~0.7 s of bloom build for nothing. Output is bit-identical
-    by construction (same oracle row pins both — tests/
-    test_layout_ops.py asserts row equality and the broadcast-semi
-    plan shape).
-
-    Scale (100 TB): the build side (urgent-order keys) broadcasts
-    while it fits (AQE decides); beyond that this becomes a shuffled
-    left-semi of the probe side — exactly the shuffle volume x117's
-    bloom filter cuts, which is the crossover at which a deployment
-    switches twins.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # No .distinct() on the build side (r12): o_orderkey is the orders
-    # PK, so distinct was a full extra shuffle + stage deduplicating
-    # an already-unique column — and a left-semi join is insensitive
-    # to build-side duplicates anyway (measured at sf0.1x10: the
-    # distinct stage was ~0.3 s of this operator's ~0.9 s wall). For a
-    # genuinely non-unique build key, dedup before a SHUFFLED semi-
-    # join is volume hygiene; before a broadcast it only shrinks the
-    # hash table the semi-join builds either way.
-    build = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_orderkey").alias("bk")
-    )
-    return (
-        li.join(build, li["l_orderkey"] == build["bk"], "left_semi")
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            money(F.sum(rev_units()), 10000).alias("revenue"),
-        )
-        .orderBy("l_returnflag")
-    )
+    return probe.select(li.columns)
 
 
 # ---------------------------------------------------------------------------

@@ -850,7 +850,7 @@ def _ivf_candidate_pairs(
 
     Why: the banded sign-random-projection self-join is volume-bound —
     at 10x fixture scale it emits 4,258 directed candidates per vector
-    (85.2M pairs for 20k vectors, census_protocol.py r10) for a K=3
+    (85.2M pairs for 20k vectors, SCALE.md r10) for a K=3
     graph, because band buckets are CORPUS-FRACTION sized (2^band_bits
     buckets regardless of n). IVF cells instead stay CONSTANT sized
     when the caller scales ``n_cells`` with the corpus (the x62/x27
@@ -1215,7 +1215,7 @@ def ivf_knn_graph(
     instead of the banded self-join: candidates per vector stay
     ~n_probe^2 * cell_size when ``n_cells`` scales with the corpus,
     where the banded form's per-vector candidate count grows with
-    corpus density (85.2M pairs at 10x — census_protocol.py r10).
+    corpus density (85.2M pairs at 10x — SCALE.md r10).
     Registered as ``x141_ivf_knn_graph`` with a full DuckDB oracle
     (VERDICT r10 item 1); the banded x44 remains a registered peer.
     Recall floor pytest-gated in tests/test_similarity.py.
@@ -2883,7 +2883,7 @@ def _x137_oracle() -> str:
 #: fixture's 2,000 vectors — every registered-oracle scale is <= this).
 #: Above it, bits grow as ceil(log2(n / N0)) so per-bucket candidate
 #: volume stays ~constant: the stats-driven sizing that r7's 10x trial
-#: had to apply OUT OF THE LOOP (scripts/scale_trial.py special case,
+#: had to apply OUT OF THE LOOP (a special case in the trial script,
 #: after the default-knob run died disk-full) now lives in the
 #: operator — a default invocation self-sizes instead of disk-dying
 #: (VERDICT r7 item 2).
@@ -3011,19 +3011,7 @@ def x137_knn_clustering_coeff(
     knn = x44_knn_graph.__wrapped__(
         spark, sf_dir, band_bits=band_bits, n_bands=n_bands
     ).select("src", "dst")
-    und = (
-        knn.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .persist()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und, deg = _undirected(knn)
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
@@ -3033,27 +3021,7 @@ def x137_knn_clustering_coeff(
         )
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    edges = und.agg(F.count(F.lit(1)).alias("n_edges"))
-    triads = deg.agg(
-        F.sum(F.expr("d * (d - 1) DIV 2")).cast("bigint").alias("n_triads")
-    )
-    out = (
-        tri.crossJoin(F.broadcast(nodes))
-        .crossJoin(F.broadcast(edges))
-        .crossJoin(F.broadcast(triads))
-        .select(
-            F.col("n_nodes").cast("bigint").alias("n_nodes"),
-            F.col("n_edges").cast("bigint").alias("n_edges"),
-            F.col("n_tri").cast("bigint").alias("n_triangles"),
-            F.col("n_triads").cast("bigint").alias("n_triads"),
-            F.expr(
-                "CAST((3 * n_tri * 1000000) DIV greatest(n_triads, 1)"
-                " AS BIGINT)"
-            ).alias("global_cc_ppm"),
-        )
-    )
-    return unpersist_with(out, und)
+    return unpersist_with(_census_row(tri, deg, und), und)
 
 
 @query("x137b_triangle_census_graph", oracle=_x137_oracle())
@@ -3110,19 +3078,7 @@ def _census_from_knn(knn: DataFrame) -> DataFrame:
     (`triangle_census_ivf`) runs the IDENTICAL census over its own
     edges; x137b's plan is unchanged (same expressions, same persist
     lifecycle)."""
-    und = (
-        knn.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .distinct()
-        .persist()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und, deg = _undirected(knn)
     # Orient each edge from the lower (degree, id) endpoint to the
     # higher: join degrees onto both endpoints once, then flip.
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
@@ -3151,12 +3107,40 @@ def _census_from_knn(knn: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
+    out = _census_row(tri, deg, und)
+    return unpersist_with(unpersist_with(out, ori), und)
+
+
+def _undirected(knn: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The k-NN graph's distinct undirected edges ``(a, b)``, a < b,
+    persisted for the census's several reads, and its degrees
+    ``(v, d)``."""
+    und = (
+        knn.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .distinct()
+        .persist()
+    )
+    deg = (
+        und.select(F.col("a").alias("v"))
+        .unionAll(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    return und, deg
+
+
+def _census_row(tri: DataFrame, deg: DataFrame, und: DataFrame) -> DataFrame:
+    """The one census row from the triangle count ``tri`` (``n_tri``),
+    the degree frame ``deg`` (v, d) and the undirected edges ``und``:
+    x137's and `_census_from_knn`'s shared output."""
     nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     edges = und.agg(F.count(F.lit(1)).alias("n_edges"))
     triads = deg.agg(
         F.sum(F.expr("d * (d - 1) DIV 2")).cast("bigint").alias("n_triads")
     )
-    out = (
+    return (
         tri.crossJoin(F.broadcast(nodes))
         .crossJoin(F.broadcast(edges))
         .crossJoin(F.broadcast(triads))
@@ -3171,7 +3155,6 @@ def _census_from_knn(knn: DataFrame) -> DataFrame:
             ).alias("global_cc_ppm"),
         )
     )
-    return unpersist_with(unpersist_with(out, ori), und)
 
 
 def triangle_census_ivf(
@@ -3196,8 +3179,7 @@ def triangle_census_ivf(
     unchanged, and the IVF-vs-banded diagnostic deltas are pinned by a
     pytest tolerance gate on the sf0.001 exact graph. Registered as
     ``x142_ivf_triangle_census`` with a full DuckDB oracle (VERDICT
-    r10 item 1); also measured by scripts/census_protocol.py
-    --stages ivf.
+    r10 item 1); its scale walls are in SCALE.md r10.
     """
     knn = ivf_knn_graph(spark, sf_dir, n_cells=n_cells, n_probe=n_probe)
     # Same lifetime chain as ivf_knn_graph: the census result keeps
@@ -3249,7 +3231,7 @@ def x142_ivf_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same five-column census contract and a full DuckDB oracle
     built from `_ivf_pairs_sql` + the shared `_census_sql_tail`.
     Measured walls: 76 s at ×10 vs 200 s banded, exponent ≈1.23
-    (census_protocol.py r10). This retires the banded-census
+    (SCALE.md r10). This retires the banded-census
     perf-weak flag: the scale-safe form is now driver-checked.
     """
     return triangle_census_ivf(spark, sf_dir)

@@ -67,8 +67,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     A ``{name}.parquet`` file is read with the schema its footer pins
     (:func:`footer_schema`): pyarrow reads the footer in-process, so
     the load runs no Spark job. Spark's own inference runs one schema job
-    per table; it stays the fallback for a directory-form table, a
-    footer type outside the fixture map, and the ``catalog:`` scheme.
+    per table; it stays the fallback for a directory-form table and a
+    footer type outside the fixture map.
     Every fixture stores ``events.ts`` as TIMESTAMP(MICROS,
     isAdjustedToUTC=false), which both paths read as TIMESTAMP_NTZ.
 
@@ -83,20 +83,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     apply_runtime_conf(spark)
     cache: dict = spark.__dict__.setdefault("_adbs_table_cache", {})
-    # "catalog:<prefix>" resolves <prefix><name> as a CATALOG table
-    # instead of a parquet directory — the warehouse posture: lets any
-    # registry operator run unchanged against managed (e.g. bucketed)
-    # tables, which is how a 100 TB deployment actually stores facts
-    # (scripts/joinblock_bucketed.py uses this to bench the TPC-H join
-    # block on bucketed layout; write via sources/bucketing.py).
-    if sf_dir.startswith("catalog:"):
-        # NOT memoized: catalog tables are mutable (DROP/overwrite in
-        # the same session — the bench/test pattern), so a cached
-        # DataFrame would stay bound to the dropped table's file
-        # index; spark.table() is a metastore lookup, not a directory
-        # listing, so there is nothing expensive to memoize anyway.
-        prefix = sf_dir[len("catalog:"):]
-        return _events_fixup(spark.table(f"{prefix}{name}"), name)
     key = (os.path.abspath(sf_dir), name)
     hit = cache.get(key)
     if hit is not None:
@@ -153,9 +139,9 @@ _INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 def _events_fixup(df: DataFrame, name: str) -> DataFrame:
     """A user's ``events.ts`` stored as INT64 TIMESTAMP(NANOS) is read
     as long under ``nanosAsLong``: convert it to microsecond
-    TIMESTAMP_NTZ by integer division — one conversion shared by the
-    parquet and catalog resolution paths. The fixtures store micros
-    and never take this branch."""
+    TIMESTAMP_NTZ by integer division, for the file and the
+    directory form alike. The fixtures store micros and never take
+    this branch."""
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
@@ -173,6 +159,25 @@ def register_views(
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def duckdb_conn(sf_dir: str):
+    """A DuckDB connection with a view per table under ``sf_dir``: the
+    oracle side of :func:`register_views`. A directory-form table (what
+    Spark writes) is read through a ``*.parquet`` glob, since DuckDB
+    finds no file at the bare directory path; a missing table is
+    skipped."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name in TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        elif not os.path.exists(path):
+            continue
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+    return con
 
 
 def local_frame(

@@ -60,10 +60,11 @@ HEADLINE_V2 = [
     "x116_merge_upsert",
     # r9 (VERDICT r8 item 4): the v2 set times the REGISTERED plan
     # choice at fixture scale — x117b's plain broadcast-semi (the
-    # measured local winner; scripts/x117_crossover.py puts the bloom
-    # form's crossover at ~x12-13 local volume) — instead of charging
-    # the set ~0.7 s of bloom build with nothing to cut. The bloom
-    # twin x117 stays registered as the documented at-scale insurance.
+    # measured local winner; the r8 crossover trial, SCALE.md, put the
+    # bloom form's crossover at ~x12-13 local volume) — instead of
+    # charging the set ~0.7 s of bloom build with nothing to cut. The
+    # bloom twin x117 stays registered as the documented at-scale
+    # insurance.
     "x117b_plain_semijoin",
     "x125_phrase_match",
     "x127_corr_matrix",
@@ -240,16 +241,10 @@ def main() -> int:
     duck_timings: dict[str, float] = {}
     v2_duck: dict[str, float] = {}
     try:
-        import duckdb
-
         from ask_duckdb_spark.operators import ORACLES
-        from ask_duckdb_spark.sources.catalog import TABLES
+        from ask_duckdb_spark.sources.catalog import duckdb_conn
 
-        con = duckdb.connect()
-        for t in TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(p):
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        con = duckdb_conn(sf_dir)
         for rep in range(REPS):
             for name in HEADLINE + HEADLINE_V2:
                 if name in ORACLES:

@@ -19,7 +19,6 @@ import os
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
@@ -27,15 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ask_duckdb_spark.operators import ORACLES, QUERIES  # noqa: E402
 from ask_duckdb_spark.session import get_spark  # noqa: E402
-from ask_duckdb_spark.sources.catalog import TABLES  # noqa: E402
-
-
-def duck_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
+from ask_duckdb_spark.sources.catalog import duckdb_conn  # noqa: E402
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -125,7 +116,7 @@ def main() -> int:
         )
     else:
         spark = get_spark("diffcheck")
-    con = duck_conn(args.sf)
+    con = duckdb_conn(args.sf)
     n_pass = n_fail = n_rows_only = 0
     for name in names:
         fn = QUERIES[name]

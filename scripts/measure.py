@@ -1,11 +1,15 @@
-"""Per-operator measurement of registry entries: one loop, two entry points.
+"""Per-operator measurement of registry entries, and the scale corpus.
 
     SPARK_GRAFT_SF_DIR=<fixture dir> python scripts/measure.py sweep [names...]
     SPARK_GRAFT_SF_DIR=<fixture dir> python scripts/measure.py profile TAG [names...]
+    SPARK_GRAFT_SF_DIR=<fixture dir> python scripts/measure.py corpus FACTOR DIR
 
 ``sweep`` defaults to the whole registry; ``profile`` defaults to
 bench.py's two headline sets and also writes each entry's formatted plan
-to ``plans/TAG/<name>.txt``.
+to ``plans/TAG/<name>.txt``. ``corpus`` writes FACTOR shard replicas of
+the fixture dir to DIR (:func:`build_corpus`); timing at that scale is
+``sweep`` over DIR per entry, and ``SPARK_GRAFT_SF_DIR=DIR python
+bench.py`` for the Spark/DuckDB ratio.
 
 Each rep follows the protocol of a one-shot client: build the frame
 fresh (timed apart, as ``build``: Python/Py4J plan construction), time
@@ -44,13 +48,35 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from ask_duckdb_spark.operators import QUERIES  # noqa: E402
+from ask_duckdb_spark.operators.stats_audit import PHRASE  # noqa: E402
+from ask_duckdb_spark.operators.textstats import BM25_TERMS  # noqa: E402
 from ask_duckdb_spark.plans.checks import formatted_plan  # noqa: E402
+from ask_duckdb_spark.sources.catalog import TABLES, load_table  # noqa: E402
 from bench import HEADLINE, HEADLINE_V2, floor_probe, warm_up  # noqa: E402
 from hostspeed import HostSpeed  # noqa: E402
 from spans import Tracer  # noqa: E402
 
 REPS = 3
+
+#: Per-replica key stride, above every fixture key: replica r adds
+#: r * KEY_STRIDE to the key columns below, so the corpus is FACTOR
+#: independent shards and every join keeps its base fan-out.
+KEY_STRIDE = 100_000_000
+OFFSETS: dict[str, tuple[str, ...]] = {
+    "customer": ("c_custkey",),
+    "supplier": ("s_suppkey",),
+    "part": ("p_partkey",),
+    "orders": ("o_orderkey", "o_custkey"),
+    "lineitem": ("l_orderkey", "l_suppkey", "l_partkey"),
+    "events": ("event_id", "user_id"),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
+}
+#: Dimension tables, copied unchanged.
+CONSTANT = ("nation", "region")
 
 
 def measure(spark, sf_dir: str, names, reps: int = REPS, host=None,
@@ -106,23 +132,92 @@ def measure(spark, sf_dir: str, names, reps: int = REPS, host=None,
         yield rec
 
 
+def build_corpus(spark, base: str, factor: int, out_dir: str) -> None:
+    """Write ``factor`` shard replicas of every table under ``base`` to
+    ``out_dir``, each as a parquet directory.
+
+    Besides the key offsets (:data:`OFFSETS`), each replica suffixes
+    every word of ``documents.text`` with ``~r``, so replicas of one
+    document share no shingle and the true-duplicate rate stays the
+    base corpus's; the BM25 query terms and the phrase words are kept
+    verbatim, so retrieval entries still match. Each replica also
+    jitters every ``embeddings`` dimension by a hashed offset in
+    [-0.5, 0.5], so replicas of one vector are not exact duplicates.
+    """
+    rep = F.col("_rep")
+    reps = spark.range(factor).select(F.col("id").alias("_rep"))
+    keep = sorted(set(BM25_TERMS) | set(PHRASE))
+    rewrite = {
+        ("documents", "text"): F.array_join(
+            F.transform(
+                F.split("text", " "),
+                lambda w: F.when(w.isin(*keep), w).otherwise(
+                    F.concat(w, F.lit("~"), rep.cast("string"))
+                ),
+            ),
+            " ",
+        ),
+        ("embeddings", "embedding"): F.zip_with(
+            "embedding",
+            F.sequence(F.lit(1), F.size("embedding")),
+            lambda v, i: (
+                v.cast("double")
+                + (F.pmod(F.xxhash64(rep, i), F.lit(1001)) - 500) / 1000.0
+            ).cast("float"),
+        ),
+    }
+    for t in TABLES:
+        src = load_table(spark, base, t)
+        dst = os.path.join(out_dir, f"{t}.parquet")
+        if t in CONSTANT:
+            src.write.mode("overwrite").parquet(dst)
+            continue
+        cols = [
+            (F.col(c) + rep * KEY_STRIDE if c in OFFSETS.get(t, ())
+             else rewrite.get((t, c), F.col(c))).alias(c)
+            for c in src.columns
+        ]
+        src.crossJoin(reps).select(*cols).repartition(32).write.mode(
+            "overwrite"
+        ).parquet(dst)
+
+
 def main(argv: list[str]) -> int:
     mode, args = (argv[0], argv[1:]) if argv else ("", [])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if mode not in ("sweep", "profile") or (mode == "profile" and not args):
+    valid = {
+        "sweep": True,
+        "profile": bool(args),
+        "corpus": len(args) == 2 and args[0].isdigit() and int(args[0]) > 0,
+    }
+    if not valid.get(mode):
         print(__doc__, file=sys.stderr)
         return 2
     if not sf_dir:
         print("measure: set SPARK_GRAFT_SF_DIR to a fixture dir", file=sys.stderr)
         return 2
+    from ask_duckdb_spark.session import get_spark
+
+    if mode == "corpus":
+        t_start = time.perf_counter()
+        spark = get_spark("measure-corpus")
+        try:
+            build_corpus(spark, sf_dir, int(args[0]), args[1])
+        finally:
+            spark.stop()
+        print(json.dumps({
+            "corpus": args[1],
+            "base": sf_dir,
+            "factor": int(args[0]),
+            "wall_s": round(time.perf_counter() - t_start, 1),
+        }), flush=True)
+        return 0
     plans_dir = None
     if mode == "profile":
         tag, args = args[0], args[1:]
         plans_dir = os.path.join(ROOT, "plans", tag)
         os.makedirs(plans_dir, exist_ok=True)
     names = args or (sorted(QUERIES) if mode == "sweep" else HEADLINE + HEADLINE_V2)
-
-    from ask_duckdb_spark.session import get_spark
 
     t_start = time.perf_counter()
     load_start = os.getloadavg()[0]

@@ -79,32 +79,6 @@ def test_bucketed_join_matches_shuffled_join(spark, bucketed_tables):
     assert bucketed == plain
 
 
-def test_catalog_scheme_resolves_managed_tables(spark):
-    """load_table's "catalog:<prefix>" scheme (the warehouse posture:
-    registry operators run unchanged over managed/bucketed tables —
-    scripts/joinblock_bucketed.py's mechanism): row parity with the
-    parquet-directory path for a plain and a bucketed table."""
-    from ask_duckdb_spark.sources.catalog import load_table
-
-    region = load_table(spark, SF_DIR, "region")
-    region.write.mode("overwrite").saveAsTable("cats_region")
-    write_bucketed(
-        load_table(spark, SF_DIR, "orders"), "cats_orders", ["o_orderkey"]
-    )
-    try:
-        via_cat = load_table(spark, "catalog:cats_", "region")
-        assert sorted(map(tuple, via_cat.collect())) == sorted(
-            map(tuple, region.collect())
-        )
-        assert (
-            load_table(spark, "catalog:cats_", "orders").count()
-            == load_table(spark, SF_DIR, "orders").count()
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cats_region")
-        spark.sql("DROP TABLE IF EXISTS cats_orders")
-
-
 def test_stale_working_dir_table_does_not_block_save(spark):
     """A killed run leaves a non-empty managed-table directory in the
     working dir's ``spark-warehouse``. The directory is left in place on
