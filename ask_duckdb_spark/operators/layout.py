@@ -35,7 +35,6 @@ from ._util import (
     money_sql,
     rev_units,
     rev_units_sql,
-    unpersist_with,
 )
 from .registry import query
 
@@ -184,11 +183,10 @@ FROM customer t FULL OUTER JOIN src s ON t.c_custkey = s.k
 # stays map-side combinable; balances ride exact integer cents
 # (``bal_units``) until one identical closing division on both engines.
 # The source feeds three consumers (update join, touched semi, insert
-# anti), so callers materialize it once: without that each consumer
-# re-ran the orders scan + aggregate (measured 12-exchange plan at
-# sf0.1x10). x116 persists it, because registry builders stay lazy;
-# the CDC apply runs eagerly and checkpoints it, which spares AQE's
-# per-consumer cache-stage jobs.
+# anti). The CDC apply runs eagerly and checkpoints it once, which
+# spares AQE's per-consumer cache-stage jobs. x116 plans it inline:
+# a persist there ran 9 jobs and 28 tasks per call at sf0.1 where the
+# inline plan runs 6 and 7, at a lower wall.
 
 
 def merge_source(orders: DataFrame) -> DataFrame:
@@ -253,9 +251,7 @@ def merge_cents(target: DataFrame, src: DataFrame) -> DataFrame:
     WHEN MATCHED THEN UPDATE (balance += delta), WHEN NOT MATCHED BY
     SOURCE THEN keep, WHEN NOT MATCHED THEN INSERT a synthesized row —
     the full MERGE matrix, planned as the decomposition above and
-    analyzed once as one statement. The statement's temp views are
-    dropped on return, which uncaches a persisted ``src``: persist it
-    after this call, not before.
+    analyzed once as one statement.
     """
     return target.sparkSession.sql(_MERGE_SQL, t=target, s=src)
 
@@ -286,8 +282,7 @@ def x116_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = merge_source(
         o.filter(F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
     )
-    merged = merge_cents(cents_state(c), src)
-    return unpersist_with(dollars_view(merged), src.persist())
+    return dollars_view(merge_cents(cents_state(c), src))
 
 
 # ---------------------------------------------------------------------------
@@ -309,10 +304,10 @@ GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-def _bloom_pos(key: Column, seed: Column | int, m_bits: int = _BLOOM_BITS) -> Column:
+def _bloom_pos(key: Column, seed: Column | int) -> Column:
     """Bit position of hash function ``seed`` for ``key`` in [0, m)."""
     seed_c = F.lit(seed) if isinstance(seed, int) else seed
-    return F.pmod(F.xxhash64(key, seed_c), F.lit(m_bits))
+    return F.pmod(F.xxhash64(key, seed_c), F.lit(_BLOOM_BITS))
 
 
 def _word_mask(pos_col: str) -> tuple[Column, Column]:
@@ -329,9 +324,7 @@ def _word_mask(pos_col: str) -> tuple[Column, Column]:
 
 
 @query("x117_bloom_semijoin", oracle=_X117_ORACLE)
-def x117_bloom_semijoin(
-    spark: SparkSession, sf_dir: str, m_bits: int = _BLOOM_BITS
-) -> DataFrame:
+def x117_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join with a distributed bloom-filter pre-filter.
 
     The runtime-filter pattern Spark itself applies under
@@ -350,14 +343,13 @@ def x117_bloom_semijoin(
     semi-join shuffles only bloom survivors (~p + fp of the probe).
     The filter table is O(m/64) rows regardless of data size;
     broadcasting it costs 16 KB. False-positive rate at n build keys:
-    (1 - e^{-kn/m})^k — so ``m_bits`` MUST grow with build cardinality
-    (≈13 bits/key holds fp under 3% at k=3; the default 2^17 is sized
-    for the fixture's ~10^4 urgent orders and saturates at 100x — the
-    100x trial in SCALE.md passed m_bits = 2^17 * factor, the same
-    stats-driven sizing Spark's own injected runtime filter performs;
-    a knobbed call voids the registered oracle).
+    (1 - e^{-kn/m})^k — so m MUST grow with build cardinality
+    (≈13 bits/key holds fp under 3% at k=3; ``_BLOOM_BITS`` = 2^17 is
+    sized for the fixture's ~10^4 urgent orders and saturates at 100x —
+    the 100x trial in SCALE.md used 2^17 * factor, the same
+    stats-driven sizing Spark's own injected runtime filter performs).
     """
-    return _urgent_flag_totals(spark, sf_dir, m_bits)
+    return _urgent_flag_totals(spark, sf_dir, bloom=True)
 
 
 @query("x117b_plain_semijoin", oracle=_X117_ORACLE)
@@ -386,15 +378,15 @@ def x117b_plain_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom filter cuts, which is the crossover at which a deployment
     switches twins.
     """
-    return _urgent_flag_totals(spark, sf_dir, None)
+    return _urgent_flag_totals(spark, sf_dir, bloom=False)
 
 
 def _urgent_flag_totals(
-    spark: SparkSession, sf_dir: str, m_bits: int | None
+    spark: SparkSession, sf_dir: str, bloom: bool
 ) -> DataFrame:
     """Per-flag totals of the lineitems of urgent orders: the exact
-    left-semi join behind x117 (a bloom pre-filter of ``m_bits`` bits
-    on the probe side) and x117b (``m_bits=None``, no pre-filter)."""
+    left-semi join behind x117 (``bloom``: a bloom pre-filter on the
+    probe side) and x117b (no pre-filter)."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # No .distinct() on the build side (r12): o_orderkey is the orders
@@ -408,7 +400,7 @@ def _urgent_flag_totals(
     build = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").alias("bk")
     )
-    probe = li if m_bits is None else _bloom_probe(li, build, m_bits)
+    probe = _bloom_probe(li, build) if bloom else li
     return (
         probe.join(build, probe["l_orderkey"] == build["bk"], "left_semi")
         .groupBy("l_returnflag")
@@ -420,13 +412,13 @@ def _urgent_flag_totals(
     )
 
 
-def _bloom_probe(li: DataFrame, build: DataFrame, m_bits: int) -> DataFrame:
+def _bloom_probe(li: DataFrame, build: DataFrame) -> DataFrame:
     """The lineitems whose ``l_orderkey`` passes a bloom filter of the
     build keys ``bk``: a superset of the semi-join's rows."""
     # Bloom build: k hash positions per key -> OR-aggregated words.
     seeds = F.explode(F.array(*[F.lit(s) for s in range(_BLOOM_K)])).alias("seed")
     positions = build.select("bk", seeds).select(
-        _bloom_pos(F.col("bk"), F.col("seed"), m_bits).alias("pos")
+        _bloom_pos(F.col("bk"), F.col("seed")).alias("pos")
     )
     bword, bmask = _word_mask("pos")
     words = (
@@ -439,7 +431,7 @@ def _bloom_probe(li: DataFrame, build: DataFrame, m_bits: int) -> DataFrame:
     probe = li
     for s in range(_BLOOM_K):
         probe = probe.withColumn(
-            f"_p{s}", _bloom_pos(F.col("l_orderkey"), s, m_bits)
+            f"_p{s}", _bloom_pos(F.col("l_orderkey"), s)
         )
         w, m = _word_mask(f"_p{s}")
         ws = words.select(

@@ -9,9 +9,6 @@ its differential test, sqllogictest-style (SURVEY.md §5.2).
 
 from __future__ import annotations
 
-import functools
-import inspect
-import warnings
 from collections.abc import Callable
 from typing import Any
 
@@ -19,52 +16,14 @@ QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def _guard_knobs(name: str, fn):
-    """Wrap a knobbed operator so any non-default knob warns LOUDLY.
-
-    Registry oracles are generated from the operator's DEFAULT knobs
-    (x62's codebook size, x44/x137's band widths, x117's filter bits);
-    a parameterized call compared against the registered oracle would
-    diverge SILENTLY. VERDICT r5 added this warning to x62/x63 ad hoc;
-    VERDICT r7 item 6 generalizes it: every ``@query`` operator whose
-    signature has parameters beyond (spark, sf_dir) gets the guard at
-    registration, so a new knobbed operator cannot forget it.
-
-    Passing a knob EQUAL to its default stays silent (callers thread
-    ``knob=None`` through composed operators, e.g. x137 -> x44).
-    """
-    sig = inspect.signature(fn)
-    knob_names = list(sig.parameters)[2:]
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        bound = sig.bind(*args, **kwargs)
-        passed = {
-            k: v
-            for k, v in bound.arguments.items()
-            if k in knob_names and v != sig.parameters[k].default
-        }
-        if passed:
-            warnings.warn(
-                f"{name} called with non-default knobs {passed}: the "
-                "registered DuckDB oracle is generated from the defaults "
-                "and is VOID for this invocation — regenerate the oracle "
-                "from the same knobs before comparing.",
-                stacklevel=2,
-            )
-        return fn(*args, **kwargs)
-
-    return wrapper
-
-
 def query(name: str, oracle: str | None = None):
     """Register ``fn(spark, sf_dir) -> DataFrame`` under ``name``.
 
     ``oracle`` is the equivalent DuckDB SQL (omit for ops that are not
     SQL-expressible — the driver then records a weaker rows-only check).
-    Oracle-paired operators with knob parameters beyond (spark, sf_dir)
-    are wrapped by :func:`_guard_knobs` — a non-default knob voids the
-    registered oracle and must say so.
+    The callable takes exactly (spark, sf_dir): the oracle is generated
+    from the same module constants the builder reads, so there is no
+    parameter through which a call could diverge from it.
 
     Registered callables build a FRESH plan per call, deliberately: a
     returned DataFrame carries mutable queryExecution state (AQE
@@ -78,13 +37,9 @@ def query(name: str, oracle: str | None = None):
     def deco(fn):
         if name in QUERIES:
             raise ValueError(f"duplicate operator name: {name}")
-        registered = fn
-        if oracle is not None and len(inspect.signature(fn).parameters) > 2:
-            registered = _guard_knobs(name, fn)
-        QUERIES[name] = registered
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        registered.__operator_name__ = name
-        return registered
+        return fn
 
     return deco

@@ -77,7 +77,7 @@ def x5_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_DIMS = 64
 
 
-def _plane_weights(n_planes: int = None) -> list[list[float]]:
+def _plane_weights(n_planes: int = N_PLANES) -> list[list[float]]:
     """Literal hyperplane weights in [-1, 1), seeded from md5(plane, dim).
 
     Computed ONCE in Python and embedded as plan literals on the Spark
@@ -92,8 +92,6 @@ def _plane_weights(n_planes: int = None) -> list[list[float]]:
     """
     import hashlib
 
-    if n_planes is None:
-        n_planes = N_PLANES
     ws = []
     for p in range(n_planes):
         row = []
@@ -110,8 +108,8 @@ def _plane_weights(n_planes: int = None) -> list[list[float]]:
 _WEIGHTS = _plane_weights()
 
 
-def _band_keys(vec_col, n_bands: int = None, band_bits: int = None):
-    """Banded sign-random-projection keys: array of ``n_bands`` structs.
+def _band_keys(vec_col, band_bits: int = BAND_BITS):
+    """Banded sign-random-projection keys: array of ``N_BANDS`` structs.
 
     Each band packs ``band_bits`` sign bits; two vectors are candidates
     when ANY band key matches — the OR'd multi-table LSH construction
@@ -120,23 +118,17 @@ def _band_keys(vec_col, n_bands: int = None, band_bits: int = None):
     bit-identical to the oracle's list_reduce, so band keys — and thus
     candidate sets — match exactly across engines.
 
-    ``band_bits`` is the SCALE knob (SCALE.md's x69/x7b honest wall):
-    bucket count per band is 2^band_bits, so candidate volume shrinks
-    ~2^-Δbits as bits rise; production sets band_bits ≈ log2(n /
-    target_bucket_size). Defaults reproduce the registered oracle;
-    non-default values draw more planes from the same deterministic
-    weight sequence and VOID the registered oracle (the ADVICE-r4
-    parameterization rule — the recall/volume pytest gates cover the
-    non-default path).
+    ``band_bits`` sets the bucket count per band, 2^band_bits, so
+    candidate volume shrinks ~2^-Δbits as bits rise (SCALE.md's x69/x7b
+    honest wall): x106 sweeps it and x137/x137b size it from the corpus
+    (``_sized_band_bits``). Wider bands draw more planes from the same
+    deterministic weight sequence, and ``_band_keys_sql`` generates the
+    matching oracle construction.
     """
-    if n_bands is None:
-        n_bands = N_BANDS
-    if band_bits is None:
-        band_bits = BAND_BITS
     weights = (
         _WEIGHTS
-        if n_bands * band_bits <= N_PLANES
-        else _plane_weights(n_bands * band_bits)
+        if band_bits <= BAND_BITS
+        else _plane_weights(N_BANDS * band_bits)
     )
 
     def sign_bit(p: int):
@@ -153,7 +145,7 @@ def _band_keys(vec_col, n_bands: int = None, band_bits: int = None):
         return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
 
     keys = []
-    for band in range(n_bands):
+    for band in range(N_BANDS):
         bits = [sign_bit(band * band_bits + i) for i in range(band_bits)]
         key = bits[0]
         for b in bits[1:]:
@@ -188,22 +180,15 @@ def _cos_sql(a: str, b: str) -> str:
             (acc, x) -> acc + x))))"""
 
 
-def _band_keys_sql(
-    n_bands: int = None, band_bits: int = None, cte: str = "bk"
-) -> str:
+def _band_keys_sql(band_bits: int = BAND_BITS, cte: str = "bk") -> str:
     """DuckDB CTE fragment: ``<cte>(vec_id, embedding, band, bkey)`` —
     the oracle twin of ``_band_keys``, generated from the same
-    deterministic weight sequence. Defaults mirror the Spark defaults;
-    non-default widths generate the matching wider construction (the
-    x106 tuning-curve oracle sweeps several)."""
-    if n_bands is None:
-        n_bands = N_BANDS
-    if band_bits is None:
-        band_bits = BAND_BITS
+    deterministic weight sequence; the x106 tuning-curve oracle sweeps
+    several widths."""
     weights = (
         _WEIGHTS
-        if n_bands * band_bits <= N_PLANES
-        else _plane_weights(n_bands * band_bits)
+        if band_bits <= BAND_BITS
+        else _plane_weights(N_BANDS * band_bits)
     )
 
     def proj(p: int) -> str:
@@ -217,7 +202,7 @@ def _band_keys_sql(
         return f"(CASE WHEN {proj(p)} >= 0 THEN 1 ELSE 0 END)"
 
     keys = []
-    for band in range(n_bands):
+    for band in range(N_BANDS):
         keys.append(
             " + ".join(
                 f"{2 ** (band_bits - 1 - i)} * {bit(band * band_bits + i)}"
@@ -235,7 +220,7 @@ def _band_keys_sql(
       FROM embeddings
     ), {cte} AS (
       SELECT vec_id, embedding, band, ks[band + 1] AS bkey
-      FROM keys_{cte}, range({n_bands}) t(band)
+      FROM keys_{cte}, range({N_BANDS}) t(band)
     )"""
 
 
@@ -306,7 +291,7 @@ N_PROBE = 3  # cells searched per query
 QSCALE = 1 << 20
 
 
-def _ivf_centroids(emb: DataFrame, n_cells: int = None) -> DataFrame:
+def _ivf_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> DataFrame:
     """K-means-lite codebook: deterministic seeds + one Lloyd step.
 
     Seeds are the first ``n_cells`` vectors (deterministic, no RNG);
@@ -316,14 +301,12 @@ def _ivf_centroids(emb: DataFrame, n_cells: int = None) -> DataFrame:
     rebuilt into an ordered array — the distributed iterative-algorithm
     shape (more Lloyd iterations would repeat this block).
 
-    ``n_cells`` is the compile-time scale knob (default N_CELLS, the
-    test-SF pin): at 100 TB set it to n / target_cell_size so cells
-    stay constant-sized and every within-cell scan stays linear —
-    an eager count here would violate the build-without-materializing
-    gate, so the caller owns the corpus-size estimate.
+    ``n_cells`` is N_CELLS for every registered entry; at 100 TB the
+    codebook grows to n / target_cell_size so cells stay constant-sized
+    and every within-cell scan stays linear — an eager count here would
+    violate the build-without-materializing gate, so that estimate
+    belongs to a catalog statistic, not to this builder.
     """
-    if n_cells is None:
-        n_cells = N_CELLS
     # Norm hoist (same as _assign_cells): this is an n x k scan.
     seeds = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell"),
@@ -472,19 +455,16 @@ def _ivf_sql() -> str:
     )"""
 
 
-def _ivf_pairs_sql(keep_self: bool) -> str:
-    """DuckDB CTE fragment ``pairs`` — the oracle twin of
-    `_ivf_candidate_pairs` at the DEFAULT knobs (N_CELLS codebook,
-    N_PROBE multi-probe, KNN_MAX_BUCKET primary-member cap), the IVF
+def _ivf_pairs_sql() -> str:
+    """DuckDB CTE fragment ``pairs(src, dst, ea, eb)`` — the oracle
+    twin of `_ivf_candidate_pairs` (N_CELLS codebook, N_PROBE
+    multi-probe, KNN_MAX_BUCKET primary-member cap), the IVF
     counterpart of `_capped_pairs_sql`. Multi-probe assignment keeps
-    the n_probe nearest cells per vector (same float-exact cosine
+    the N_PROBE nearest cells per vector (same float-exact cosine
     ranking the single-probe ``asg`` uses, so x27/x62's bit-exact
     cross-engine evidence carries over); the skew cap counts PRIMARY
     (rn = 1) members per cell, mirroring the Spark fix for ADVICE
-    r10's replicated-occupancy finding. Column names follow the
-    consumer convention of `_capped_pairs_sql`."""
-    na, nb = ("src", "dst") if keep_self else ("id_a", "id_b")
-    cmp = "a.vec_id <> b.vec_id" if keep_self else "a.vec_id < b.vec_id"
+    r10's replicated-occupancy finding."""
     cos_cent = _cos_sql("e.embedding", "c.cv")
     return f"""{_ivf_cents_sql()}, asgp AS (
       SELECT vec_id, embedding, cell, rn FROM (
@@ -501,9 +481,9 @@ def _ivf_pairs_sql(keep_self: bool) -> str:
       FROM asgp g LEFT JOIN prim p ON g.cell = p.cell
       WHERE COALESCE(p.psz, 0) <= {KNN_MAX_BUCKET}
     ), pairs AS (
-      SELECT DISTINCT a.vec_id AS {na}, b.vec_id AS {nb},
+      SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst,
              a.embedding AS ea, b.embedding AS eb
-      FROM ivfcap a JOIN ivfcap b ON a.cell = b.cell AND {cmp}
+      FROM ivfcap a JOIN ivfcap b ON a.cell = b.cell AND a.vec_id <> b.vec_id
     )"""
 
 
@@ -741,9 +721,8 @@ KNN_MAX_BUCKET = 2048
 def _banded_candidate_pairs(
     emb: DataFrame,
     keep_self: bool = False,
-    n_bands: int = None,
-    band_bits: int = None,
-    max_bucket: int = None,
+    band_bits: int = BAND_BITS,
+    max_bucket: int = KNN_MAX_BUCKET,
 ) -> DataFrame:
     """Ordered candidate pairs sharing >=1 sign-random-projection band.
 
@@ -768,18 +747,14 @@ def _banded_candidate_pairs(
     to multi-GB corpora, and that stay key-partitioned shuffles (of n
     rows, not n_pairs x 2 vectors) beyond.
 
-    Skew guard: buckets larger than ``max_bucket`` (default
-    ``KNN_MAX_BUCKET``) are dropped wholesale before pairing — the
+    Skew guard: buckets larger than ``max_bucket`` (``KNN_MAX_BUCKET``
+    in every registered plan) are dropped wholesale before pairing — the
     window count rides the same (band, bkey) partitioning the self-
     join needs, so the guard adds no extra exchange of its own.
     """
-    if max_bucket is None:
-        max_bucket = KNN_MAX_BUCKET
     banded = emb.select(
         "vec_id",
-        F.explode(
-            _band_keys(F.col("embedding"), n_bands, band_bits)
-        ).alias("bk"),
+        F.explode(_band_keys(F.col("embedding"), band_bits)).alias("bk"),
     ).select(
         "vec_id",
         F.col("bk.band").alias("band"),
@@ -838,76 +813,66 @@ def _attach_embeddings(ids: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_candidate_pairs(
-    emb: DataFrame,
-    keep_self: bool = False,
-    n_cells: int = None,
-    n_probe: int = N_PROBE,
-    max_bucket: int = None,
-) -> DataFrame:
-    """IVF-partitioned candidate pairs — the SCALE path for the
-    x44-family candidate wall (VERDICT r9 item 3).
+def _ivf_candidate_pairs(emb: DataFrame) -> DataFrame:
+    """Directed IVF-partitioned candidate pairs (both directions, no
+    diagonal) — the SCALE path for the x44-family candidate wall
+    (VERDICT r9 item 3).
 
     Why: the banded sign-random-projection self-join is volume-bound —
     at 10x fixture scale it emits 4,258 directed candidates per vector
     (85.2M pairs for 20k vectors, SCALE.md r10) for a K=3
     graph, because band buckets are CORPUS-FRACTION sized (2^band_bits
     buckets regardless of n). IVF cells instead stay CONSTANT sized
-    when the caller scales ``n_cells`` with the corpus (the x62/x27
-    design point): candidates per vector ~= n_probe^2 * cell_size,
+    when the codebook scales with the corpus (the x62/x27 design
+    point): candidates per vector ~= N_PROBE^2 * cell_size,
     independent of corpus growth.
 
     Construction: coarse codebook via `_ivf_centroids` (deterministic
     seeds + one Lloyd step, broadcast-sized), every vector assigned to
-    its ``n_probe`` nearest cells (multi-probe replication — boundary
-    neighbors share a cell with probability rising in n_probe), pairs
+    its N_PROBE nearest cells (multi-probe replication — boundary
+    neighbors share a cell with probability rising in N_PROBE), pairs
     generated WITHIN cells only. Same shuffle discipline as the banded
     form: the cell self-join and dedup move (vec_id, cell) / (id_a,
     id_b) only; embeddings and hoisted norms join back by id at the
     end (`_attach_embeddings`). Same skew cap: a degenerate cell
-    (collapsed embedding space) is dropped at ``max_bucket`` PRIMARY
+    (collapsed embedding space) is dropped at ``KNN_MAX_BUCKET`` PRIMARY
     members (rn == 1 assignments, counted BEFORE multi-probe
     replication — ADVICE r10: counting replicated occupancy would make
-    the cap bind ~n_probe× earlier than the banded form's same-named
-    ``KNN_MAX_BUCKET`` and silently drop healthy cells), riding the
-    join's own partitioning.
+    the cap bind ~N_PROBE× earlier than the banded form's and silently
+    drop healthy cells), riding the join's own partitioning.
 
     Recall is geometry-dependent (a true neighbor straddling two probe
     sets of disjoint cells is missed): on the near-uniform synthetic
-    embeddings n_probe=2 reads 0.723 graph recall, n_probe=3 (the
-    default — N_PROBE, the x27 convention) reads 0.953 and n_probe=4
-    0.998 (measured r10, sf0.001); the kNN-graph recall floor is
-    pytest-gated in tests/test_similarity.py like x87's. Since r11
+    embeddings 2 probes read 0.723 graph recall, 3 (N_PROBE, the x27
+    convention) read 0.953 and 4 read 0.998 (measured r10, sf0.001);
+    the kNN-graph recall floor is pytest-gated in
+    tests/test_similarity.py like x87's. Since r11
     both candidate generators are registered, oracle-paired peers
-    (banded x44/x137, IVF x141/x142); this is the at-scale form,
-    selected by the n_cells knob a 100 TB deployment sets from its
-    corpus-size estimate.
+    (banded x44/x137, IVF x141/x142); this is the at-scale form.
     """
-    if max_bucket is None:
-        max_bucket = KNN_MAX_BUCKET
     # persist BOTH fan-out frames (the x27/x62 cents lifecycle, plus
     # the assignment): cents feeds the assignment, and the assignment
     # feeds three branches (prim census + both self-join sides).
     # Without the persists every branch re-expands the full
     # centroid+assignment lineage — measured r11: the x141 plan
     # scanned the embeddings parquet 14x per execution.
-    cents = _ivf_centroids(emb, n_cells).persist()
+    cents = _ivf_centroids(emb).persist()
     # Multi-probe assignment via the shared scorer (one tie-break, one
     # norm hoist — x27/x62's `_assign_cells` with n_probe > 1).
     assigned = (
-        _assign_cells(emb, cents, n_probe=n_probe, keep_rank=True)
+        _assign_cells(emb, cents, n_probe=N_PROBE, keep_rank=True)
         .select("vec_id", "cell", "rn")
         .persist()
     )
-    # Primary-member census per cell: n_cells rows, joined back onto
-    # the replicated assignment. A cell with no primary members keeps
-    # its replicated visitors (COALESCE 0 <= cap). No forced broadcast
-    # hint (ADVICE r11): n_cells scales with corpus size at the design
-    # point (n / target_cell_size — ~1e7 cells for 1e10 vectors), so a
-    # hard hint could pin a driver-OOM plan; AQE broadcasts the census
-    # whenever its runtime size is actually small and degrades to a
-    # shuffled join when it isn't — the same posture dedup.py took in
-    # r11 for the touched-id semi-join.
+    # Primary-member census per cell: one row per cell, joined back
+    # onto the replicated assignment. A cell with no primary members
+    # keeps its replicated visitors (COALESCE 0 <= cap). No forced
+    # broadcast hint (ADVICE r11): the cell count scales with corpus
+    # size at the design point (n / target_cell_size — ~1e7 cells for
+    # 1e10 vectors), so a hard hint could pin a driver-OOM plan; AQE
+    # broadcasts the census whenever its runtime size is actually small
+    # and degrades to a shuffled join when it isn't — the same posture
+    # dedup.py took in r11 for the touched-id semi-join.
     prim = (
         assigned.filter(F.col("rn") == 1)
         .groupBy("cell")
@@ -915,19 +880,14 @@ def _ivf_candidate_pairs(
     )
     capped = (
         assigned.join(prim, ["cell"], "left")
-        .filter(F.coalesce(F.col("psz"), F.lit(0)) <= max_bucket)
+        .filter(F.coalesce(F.col("psz"), F.lit(0)) <= KNN_MAX_BUCKET)
         .select("vec_id", "cell")
     )
     a = capped.select(F.col("vec_id").alias("id_a"), "cell")
     b = capped.select(F.col("vec_id").alias("id_b"), "cell")
-    keep = (
-        F.col("id_a") != F.col("id_b")
-        if keep_self
-        else F.col("id_a") < F.col("id_b")
-    )
     ids = (
         a.join(b, ["cell"])
-        .filter(keep)
+        .filter(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -1153,12 +1113,7 @@ def _x44_oracle() -> str:
 
 
 @query("x44_knn_graph", oracle=_x44_oracle())
-def x44_knn_graph(
-    spark: SparkSession,
-    sf_dir: str,
-    band_bits: int = None,
-    n_bands: int = None,
-) -> DataFrame:
+def x44_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-NN graph: top-3 neighbors for EVERY vector.
 
     The corpus-wide generalization of x6 (one query) and x25 (a query
@@ -1171,18 +1126,25 @@ def x44_knn_graph(
     tests/test_similarity.py gates graph recall against the exact
     brute-force graph at sf0.01.
     """
+    return _banded_knn_graph(spark, sf_dir, BAND_BITS)
+
+
+def _banded_knn_graph(
+    spark: SparkSession, sf_dir: str, band_bits: int
+) -> DataFrame:
+    """The banded k-NN graph ``(src, dst, rnk)`` at ``band_bits`` per
+    band: x44 at BAND_BITS, the census twins at the corpus-sized width
+    (``_sized_band_bits``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _rerank_topk(
-        _banded_candidate_pairs(
-            emb, keep_self=True, n_bands=n_bands, band_bits=band_bits
-        )
+        _banded_candidate_pairs(emb, keep_self=True, band_bits=band_bits)
     )
 
 
 def _rerank_topk(pairs: DataFrame) -> DataFrame:
     """Exact cosine rerank + top-KNN_K per source over a directed
     candidate frame (id_a, id_b, ea, eb, na, nb) — the shared tail of
-    `x44_knn_graph` and `ivf_knn_graph`, factored so the "same
+    `x44_knn_graph` and `x141_ivf_knn_graph`, factored so the "same
     contract and scoring" claim is enforced by shared code (one
     tie-break, one KNN_K) rather than two hand-synced blocks."""
     cands = pairs.select(
@@ -1199,37 +1161,6 @@ def _rerank_topk(pairs: DataFrame) -> DataFrame:
         .select("src", "dst", "rnk")
         .orderBy("src", "rnk")
     )
-
-
-def ivf_knn_graph(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = None,
-    n_probe: int = N_PROBE,
-) -> DataFrame:
-    """x44's k-NN graph with IVF-partitioned candidate generation —
-    the scale path for the census candidate wall (VERDICT r9 item 3).
-
-    Same contract and scoring as x44 (exact cosine rerank, top-KNN_K
-    per source, deterministic tie-break) over `_ivf_candidate_pairs`
-    instead of the banded self-join: candidates per vector stay
-    ~n_probe^2 * cell_size when ``n_cells`` scales with the corpus,
-    where the banded form's per-vector candidate count grows with
-    corpus density (85.2M pairs at 10x — SCALE.md r10).
-    Registered as ``x141_ivf_knn_graph`` with a full DuckDB oracle
-    (VERDICT r10 item 1); the banded x44 remains a registered peer.
-    Recall floor pytest-gated in tests/test_similarity.py.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = _ivf_candidate_pairs(
-        emb, keep_self=True, n_cells=n_cells, n_probe=n_probe
-    )
-    # Lifetime chain: the rerank result holds `pairs` (via the
-    # finalizer closure), whose own finalizer releases the persisted
-    # centroid/assignment frames — without this the caches died the
-    # moment this function returned (weakref fires on the LOCAL frame)
-    # and every branch re-expanded the full IVF lineage.
-    return unpersist_with(_rerank_topk(pairs), pairs)
 
 
 # --- x58: deterministic random-projection dimensionality reduction ----
@@ -1309,9 +1240,7 @@ def _x62_oracle() -> str:
 
 
 @query("x62_semdedup", oracle=_x62_oracle())
-def x62_semdedup(
-    spark: SparkSession, sf_dir: str, n_cells: int = None
-) -> DataFrame:
+def x62_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup flat twin — production use routes to x63_semdedup_hier.
 
     (Abbas et al. 2023: semantic dedup via k-means cells.)
@@ -1321,10 +1250,7 @@ def x62_semdedup(
     semantic-dedup path; x62 remains registered as its flat
     differential twin (equal-granularity recall gate in
     tests/test_similarity.py) and for corpora small enough that a flat
-    codebook is simpler. The registered oracle is generated from the
-    DEFAULT ``N_CELLS``; calling with a non-default ``n_cells`` (the
-    scale-trial path) voids the oracle pairing — compare such runs
-    against a regenerated oracle, not the registry's.
+    codebook is simpler.
 
     Cluster the corpus embeddings with the IVF codebook
     (``_ivf_centroids``: deterministic seeds + one Lloyd step), then
@@ -1355,6 +1281,14 @@ def x62_semdedup(
     cells); tests/test_similarity.py additionally re-derives the keep
     set brute-force per cell and gates equality.
     """
+    return _flat_semdedup(spark, sf_dir, N_CELLS)
+
+
+def _flat_semdedup(
+    spark: SparkSession, sf_dir: str, n_cells: int
+) -> DataFrame:
+    """x62's SemDeDup over an ``n_cells`` flat codebook: x62 at
+    N_CELLS; x63's recall test compares it at N_COARSE * N_FINE cells."""
     emb = load_table(spark, sf_dir, "embeddings")
     # Persist the codebook (as x27 does): its lineage is a multi-shuffle
     # k-means step with float avgs, and `assigned` feeds three plan
@@ -1405,7 +1339,7 @@ def x62_semdedup(
 
 #: Two-level codebook geometry: N_COARSE x N_FINE effective cells with
 #: assignment cost n x (N_COARSE + N_FINE) instead of flat-IVF's
-#: n x (N_COARSE * N_FINE). Both knobs scale as sqrt(k) with the
+#: n x (N_COARSE * N_FINE). Both counts scale as sqrt(k) with the
 #: corpus: at the 100x trial's 800-cell point that is n x 57 cosines
 #: instead of n x 800 — the fix for the measured O(n^2/cell_target)
 #: assignment wall (SCALE.md, x62 100x row).
@@ -1413,27 +1347,21 @@ N_COARSE = 4
 N_FINE = 4
 
 
-def _hier_assign(
-    emb: DataFrame, n_coarse: int = None, n_fine: int = None
-) -> DataFrame:
+def _hier_assign(emb: DataFrame) -> DataFrame:
     """(vec_id, embedding, ccell, fcell): two-level seed assignment.
 
     Level 1: nearest of N_COARSE deterministic seed vectors. Level 2:
     nearest of the N_FINE lowest-id members WITHIN the coarse cell
     (the fine seeds; fcell = that seed's vec_id). Both levels are
-    broadcast joins against seed frames bounded by the knobs — no
-    iterative state, no RNG, cosines are bit-identical left folds, so
-    the whole assignment is engine-portable.
+    broadcast joins against seed frames of N_COARSE and N_FINE rows per
+    coarse cell — no iterative state, no RNG, cosines are bit-identical
+    left folds, so the whole assignment is engine-portable.
     """
-    if n_coarse is None:
-        n_coarse = N_COARSE
-    if n_fine is None:
-        n_fine = N_FINE
     # Norm hoist on both assignment scans (n x N_COARSE + n x N_FINE
     # cosines): row norm folds once per row (_vn, carried from level 1
     # to level 2), seed norms fold once per seed inside the broadcast
     # frames — bit-identical doubles.
-    seeds_c = emb.filter(F.col("vec_id") < n_coarse).select(
+    seeds_c = emb.filter(F.col("vec_id") < N_COARSE).select(
         F.col("vec_id").alias("ccell"),
         F.col("embedding").alias("cv"),
         l2_norm(F.col("embedding")).alias("_cn"),
@@ -1454,7 +1382,7 @@ def _hier_assign(
     fine_rank = W.partitionBy("ccell").orderBy("vec_id")
     seeds_f = (
         a1.withColumn("rk", F.row_number().over(fine_rank))
-        .filter(F.col("rk") <= n_fine)
+        .filter(F.col("rk") <= N_FINE)
         .select(
             "ccell",
             F.col("vec_id").alias("fcell"),
@@ -1525,19 +1453,11 @@ def _x63_oracle() -> str:
 
 
 @query("x63_semdedup_hier", oracle=_x63_oracle())
-def x63_semdedup_hier(
-    spark: SparkSession,
-    sf_dir: str,
-    n_coarse: int = None,
-    n_fine: int = None,
-) -> DataFrame:
+def x63_semdedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical SemDeDup — the DEFAULT semantic-dedup path.
 
     (x62 is the flat differential twin; it hits a measured O(n^2/cell)
     assignment wall at 100x and is superseded at scale by this entry.)
-    The registered oracle is generated from the DEFAULT
-    ``N_COARSE``/``N_FINE``; parameterized invocations void the oracle
-    pairing (regenerate it from the passed knobs instead).
 
     Same drop rule as x62 (cosine >= NEARDUP_T to any lower-id
     cellmate, kept or not), but cells come from a TWO-LEVEL quantizer:
@@ -1547,14 +1467,15 @@ def x63_semdedup_hier(
     SCALE.md 100x point (k=800) that is 57 vs 800 per vector, turning
     the measured O(n^2/cell_target) wall back into O(n sqrt(k)).
 
-    Scale (100 TB): both seed frames are broadcast (bounded by the
-    knobs, which grow as sqrt(k)); the dedup scan shuffles once on the
-    (ccell, fcell) pair key and reuses that exchange on both join
-    sides, exactly like x62's single-key variant. Fully oracle-checked
-    end to end — seeds, tie-breaks and cosines are engine-portable.
+    Scale (100 TB): both seed frames are broadcast (bounded by
+    N_COARSE and N_FINE, which grow as sqrt(k)); the dedup scan
+    shuffles once on the (ccell, fcell) pair key and reuses that
+    exchange on both join sides, exactly like x62's single-key
+    variant. Fully oracle-checked end to end — seeds, tie-breaks and
+    cosines are engine-portable.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = _hier_assign(emb, n_coarse, n_fine)
+    assigned = _hier_assign(emb)
     # Same norm hoist as the flat-IVF form above — bit-identical.
     a = assigned.select(
         "ccell", "fcell", F.col("vec_id").alias("id_a"),
@@ -2000,7 +1921,7 @@ def x70_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     window) and one (cell, pos)-keyed map-side-combinable shuffle of
     quantized partial sums — the canonical distributed Lloyd step. At
     100 TB checkpoint the assignment every few rounds to truncate
-    lineage; N_CELLS scales as n / target_cell_size (x62's knob
+    lineage; N_CELLS scales as n / target_cell_size (x62's codebook
     discipline).
     """
     per_dim, assigned, _ = _lloyd_loop(
@@ -2636,7 +2557,7 @@ BB_SWEEP: tuple[int, ...] = (2, 3, 4)
 
 def _x106_oracle() -> str:
     frags = ", ".join(
-        _band_keys_sql(N_BANDS, bb, cte=f"bk{bb}") for bb in BB_SWEEP
+        _band_keys_sql(bb, cte=f"bk{bb}") for bb in BB_SWEEP
     )
     sels = []
     for bb in BB_SWEEP:
@@ -2713,9 +2634,7 @@ def x106_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = emb.select(
             "vec_id",
             "embedding",
-            F.explode(
-                _band_keys(F.col("embedding"), N_BANDS, bb)
-            ).alias("bk"),
+            F.explode(_band_keys(F.col("embedding"), bb)).alias("bk"),
         ).select("vec_id", "embedding", "bk.band", "bk.bkey")
         qk = (
             keys.filter(F.col("vec_id") == 0)
@@ -2835,7 +2754,7 @@ def x112_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _census_sql_tail() -> str:
     """kNN-graph triangle-census CTE chain + final SELECT over a
     ``pairs(src, dst, ea, eb)`` CTE — the oracle twin of
-    `_rerank_topk` → `_census_from_knn`, shared by the banded
+    `_rerank_topk` → `_census`, shared by the banded
     x137/x137b and the IVF x142 so the census semantics are written
     once."""
     return f"""knn AS (
@@ -2884,7 +2803,7 @@ def _x137_oracle() -> str:
 #: Above it, bits grow as ceil(log2(n / N0)) so per-bucket candidate
 #: volume stays ~constant: the stats-driven sizing that r7's 10x trial
 #: had to apply OUT OF THE LOOP (a special case in the trial script,
-#: after the default-knob run died disk-full) now lives in the
+#: after the fixed-width run died disk-full) now lives in the
 #: operator — a default invocation self-sizes instead of disk-dying
 #: (VERDICT r7 item 2).
 AUTO_BAND_N0 = 2000
@@ -2920,7 +2839,7 @@ def _parquet_rows(sf_dir: str, table: str) -> int:
     return pq.ParquetFile(p).metadata.num_rows
 
 
-def _sized_band_bits(spark: SparkSession, sf_dir: str, op: str) -> int:
+def _sized_band_bits(sf_dir: str, op: str) -> int:
     """Read the corpus size (footer metadata), auto-size the band
     width, and warn (oracle void) when the size departs the default —
     shared by x137/x137b so the twins cannot drift apart on sizing
@@ -2930,40 +2849,32 @@ def _sized_band_bits(spark: SparkSession, sf_dir: str, op: str) -> int:
     remote sf_dir (hdfs://, s3://) or a layout this helper doesn't
     recognize must not turn a previously-working default invocation
     into a plan-build error — fall back to the calibrated default
-    width with a warning, the same posture as an explicit knob."""
+    width with a warning."""
+    import warnings
+
     try:
         n = _parquet_rows(sf_dir, "embeddings")
     except (OSError, ValueError) as e:  # FileNotFoundError is an OSError
-        import warnings
-
         warnings.warn(
             f"{op} could not read parquet footers under {sf_dir!r} "
-            f"({e}); falling back to the default BAND_BITS={BAND_BITS} "
-            "— pass band_bits explicitly for non-local storage.",
+            f"({e}); falling back to the default BAND_BITS={BAND_BITS}.",
             stacklevel=3,
         )
         return BAND_BITS
     bits = _auto_band_bits(n)
     if bits != BAND_BITS:
-        import warnings
-
         warnings.warn(
             f"{op} auto-sized band_bits to {bits} (corpus > "
             f"{AUTO_BAND_N0} vectors): the registered DuckDB oracle is "
-            "generated from the defaults and is VOID for this invocation "
-            "— regenerate it from the same knobs before comparing.",
+            f"generated at BAND_BITS={BAND_BITS} and is VOID for this "
+            "input — regenerate it at the same width before comparing.",
             stacklevel=3,
         )
     return bits
 
 
 @query("x137_knn_clustering_coeff", oracle=_x137_oracle())
-def x137_knn_clustering_coeff(
-    spark: SparkSession,
-    sf_dir: str,
-    band_bits: int = None,
-    n_bands: int = None,
-) -> DataFrame:
+def x137_knn_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census + global clustering coefficient of the k-NN graph.
 
     The manifold-quality diagnostic downstream of x44: real embedding
@@ -2987,117 +2898,84 @@ def x137_knn_clustering_coeff(
     others' top-K keeps unbounded IN-degree) is degree ordering —
     iterate each triangle from its lowest-degree vertex, the standard
     node-iterator++ bound of O(m^{3/2}) — x137b runs exactly that
-    oriented form over a materialized edge list; at fixture scale this
-    entry keeps the raw join as the honest oracle-mirrorable form.
+    oriented form (``_census(..., oriented=True)``); at fixture scale
+    this entry keeps the raw join as the honest oracle-mirrorable form.
     Shuffles: two keyed joins on node ids + one global count — all
     combinable.
 
-    Band sizing is STATS-DRIVEN by default (VERDICT r7 item 2): with
-    ``band_bits=None`` the operator counts the corpus and applies
-    ``_auto_band_bits`` — bits grow ceil(log2(n / {AUTO_BAND_N0})) above
-    the calibration size, so the banded self-join's candidate volume
-    stays ~O(n · N0) instead of O(n²/2^const); r7's default-knob 10x
-    trial died DISK-FULL before this sizing existed. At every fixture
-    scale (<= {AUTO_BAND_N0} vectors) the auto size IS the default, so
-    the registered oracle pairing holds; when auto-sizing grows bits it
-    warns that the oracle is void for that invocation, same contract as
-    an explicit knob.
+    Band sizing is STATS-DRIVEN (VERDICT r7 item 2): the operator
+    counts the corpus and applies ``_auto_band_bits`` — bits grow
+    ceil(log2(n / {AUTO_BAND_N0})) above the calibration size, so the
+    banded self-join's candidate volume stays ~O(n · N0) instead of
+    O(n²/2^const); r7's fixed-width 10x trial died DISK-FULL before
+    this sizing existed. At every fixture scale (<= {AUTO_BAND_N0}
+    vectors) the auto size IS BAND_BITS, so the registered oracle
+    pairing holds; when auto-sizing grows bits it warns that the
+    oracle is void for that input.
     """
-    if band_bits is None:
-        band_bits = _sized_band_bits(spark, sf_dir, "x137_knn_clustering_coeff")
-    # __wrapped__: x137 owns the sizing policy here — the registry knob
-    # guard already spoke (or auto-sizing just did); a second warning
-    # naming x44's (unused) oracle would mislead.
-    knn = x44_knn_graph.__wrapped__(
-        spark, sf_dir, band_bits=band_bits, n_bands=n_bands
-    ).select("src", "dst")
-    und, deg = _undirected(knn)
-    e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    return unpersist_with(_census_row(tri, deg, und), und)
+    bits = _sized_band_bits(sf_dir, "x137_knn_clustering_coeff")
+    knn = _banded_knn_graph(spark, sf_dir, bits).select("src", "dst")
+    return _census(knn, oriented=False)
 
 
 @query("x137b_triangle_census_graph", oracle=_x137_oracle())
-def x137b_triangle_census_graph(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """x137's census in its PRODUCTION posture: materialized edge list
-    + degree-ordered (node-iterator++ / "forward") triangle counting.
+def x137b_triangle_census_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x137's census in its PRODUCTION posture: degree-ordered counting.
 
-    Same contract and oracle as x137 (pytest pins row equality); two
-    physical differences, both the shapes SCALE.md r7 prescribed:
-
-    1. The undirected edge list is built ONCE and ``persist()``ed
-       before the census — the three self-join branches read the
-       cached edges instead of re-running x44's banded candidate
-       generation + rank window per branch. (An earlier formulation
-       ``localCheckpoint(eager=True)``'d here, which EXECUTED the full
-       x44 job at plan-build time — violating the registry's
-       lazy-build contract and evading tests/test_plans.py's gate,
-       which at the time only tripped on count/collect/toPandas;
-       ADVICE r8. Lineage depth here is fixed, not per-round, so
-       persist is sufficient — checkpointing is only needed for the
-       iterative kernels whose plans GROW per round.) At real
-       scale this frame is the persisted kNN graph the pipeline
-       already owns (built once by x44 with IVF/bucket-capped
-       candidate generation); the census then costs only the joins
-       below, never the ANN work.
-    2. Edges are ORIENTED from the lower-(degree, id) endpoint to the
-       higher before the edge-edge join: every triangle has exactly
-       one source vertex under that total order, and each oriented
-       out-neighborhood is bounded by O(sqrt(m)) on any graph — the
-       standard O(m^(3/2)) triangle bound — so a degenerate hub (a
-       vector in millions of top-K lists) caps the join fan-out at its
-       LOW-degree neighbors instead of exploding quadratically in its
-       own degree. x137's unoriented form pays deg² on such a hub.
-
-    n_nodes/n_edges/n_triads read the same undirected frame, so every
-    output value is bit-identical to x137's — including above the
-    calibration size, where both twins share the SAME stats-driven
-    band sizing (``_sized_band_bits``): a default x137b invocation at
-    10x data self-sizes exactly as x137 does, instead of re-running
-    x44 at the disk-dying fixed default.
+    Node-iterator++ ("forward") triangle counting with the same
+    contract, oracle, graph and band sizing as x137 (pytest pins row
+    equality); the one difference is ``_census``'s ``oriented``
+    argument, the shape SCALE.md r7 prescribed: edges are ORIENTED from
+    the lower-(degree, id) endpoint to the higher before the edge-edge
+    join. Every triangle has exactly one source vertex under that
+    total order, and each oriented out-neighborhood is bounded by
+    O(sqrt(m)) on any graph — the standard O(m^(3/2)) triangle bound —
+    so a degenerate hub (a vector in millions of top-K lists) caps the
+    join fan-out at its LOW-degree neighbors instead of exploding
+    quadratically in its own degree. x137's unoriented form pays deg²
+    on such a hub.
     """
-    bits = _sized_band_bits(spark, sf_dir, "x137b_triangle_census_graph")
-    knn = x44_knn_graph.__wrapped__(spark, sf_dir, band_bits=bits).select(
-        "src", "dst"
-    )
-    return _census_from_knn(knn)
+    bits = _sized_band_bits(sf_dir, "x137b_triangle_census_graph")
+    knn = _banded_knn_graph(spark, sf_dir, bits).select("src", "dst")
+    return _census(knn, oriented=True)
 
 
-def _census_from_knn(knn: DataFrame) -> DataFrame:
-    """x137b's degree-ordered triangle census over a (src, dst) k-NN
-    edge frame — factored so the IVF-candidate scale path
-    (`triangle_census_ivf`) runs the IDENTICAL census over its own
-    edges; x137b's plan is unchanged (same expressions, same persist
-    lifecycle)."""
+def _census(knn: DataFrame, oriented: bool) -> DataFrame:
+    """The census row of a (src, dst) k-NN edge frame: x137's raw
+    edge-edge triangle join (``oriented=False``), or x137b's and x142's
+    degree-ordered one.
+
+    The undirected edge list is built ONCE and ``persist()``ed before
+    the census — the self-join branches read the cached edges instead
+    of re-running the candidate generation + rank window per branch.
+    (An earlier x137b ``localCheckpoint(eager=True)``'d here, which
+    EXECUTED the full kNN job at plan-build time — violating the
+    registry's lazy-build contract; ADVICE r8. Lineage depth here is
+    fixed, so persist is sufficient.) n_nodes/n_edges/n_triads read
+    that same undirected frame in both forms, so their output is
+    bit-identical."""
     und, deg = _undirected(knn)
-    # Orient each edge from the lower (degree, id) endpoint to the
-    # higher: join degrees onto both endpoints once, then flip.
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    lower_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    ori = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+    if oriented:
+        # Orient each edge from the lower (degree, id) endpoint to the
+        # higher: join degrees onto both endpoints once, then flip.
+        da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
+        db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
+        lower_first = (F.col("da") < F.col("db")) | (
+            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
         )
-    ).persist()
-    e1, e2, e3 = ori.alias("e1"), ori.alias("e2"), ori.alias("e3")
-    # forward counting: src->mid, mid->top, src->top all oriented —
-    # each triangle appears exactly once (from its minimum vertex
-    # under the (degree, id) order).
+        edges = (
+            und.join(da, "a")
+            .join(db, "b")
+            .select(
+                F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+                F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+            )
+        ).persist()
+    else:
+        edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
+    # src->mid, mid->top, src->top: each triangle appears exactly once
+    # (from its minimum vertex under the id or the (degree, id) order).
     tri = (
         e1.join(e2, F.col("e2.src") == F.col("e1.dst"))
         .join(
@@ -3107,8 +2985,8 @@ def _census_from_knn(knn: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    out = _census_row(tri, deg, und)
-    return unpersist_with(unpersist_with(out, ori), und)
+    out = unpersist_with(_census_row(tri, deg, und), und)
+    return unpersist_with(out, edges) if oriented else out
 
 
 def _undirected(knn: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -3133,8 +3011,7 @@ def _undirected(knn: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def _census_row(tri: DataFrame, deg: DataFrame, und: DataFrame) -> DataFrame:
     """The one census row from the triangle count ``tri`` (``n_tri``),
-    the degree frame ``deg`` (v, d) and the undirected edges ``und``:
-    x137's and `_census_from_knn`'s shared output."""
+    the degree frame ``deg`` (v, d) and the undirected edges ``und``."""
     nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     edges = und.agg(F.count(F.lit(1)).alias("n_edges"))
     triads = deg.agg(
@@ -3157,81 +3034,67 @@ def _census_row(tri: DataFrame, deg: DataFrame, und: DataFrame) -> DataFrame:
     )
 
 
-def triangle_census_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = None,
-    n_probe: int = N_PROBE,
-) -> DataFrame:
-    """The census in its CANDIDATE-SCALE posture: x137b's exact
-    degree-ordered triangle counting (`_census_from_knn`, bit-shared)
-    over `ivf_knn_graph` edges instead of the banded-candidate graph.
-
-    This is the answer to the x44 candidate wall behind the census
-    ops: the census joins were never the cost (SCALE.md r8) — the
-    banded candidate VOLUME was (85.2M pairs at 10x for a K=3 graph).
-    With ``n_cells`` scaled to corpus size (the x62 convention:
-    N_CELLS * factor), candidate volume per vector is flat in corpus
-    growth, so the whole census pipeline scales linearly. The graph is
-    the IVF approximation of the banded graph (recall pytest-gated),
-    so census COUNTS are approximate relative to x137b's — the
-    diagnostic reading (clustering coefficient as manifold health) is
-    unchanged, and the IVF-vs-banded diagnostic deltas are pinned by a
-    pytest tolerance gate on the sf0.001 exact graph. Registered as
-    ``x142_ivf_triangle_census`` with a full DuckDB oracle (VERDICT
-    r10 item 1); its scale walls are in SCALE.md r10.
-    """
-    knn = ivf_knn_graph(spark, sf_dir, n_cells=n_cells, n_probe=n_probe)
-    # Same lifetime chain as ivf_knn_graph: the census result keeps
-    # the knn frame (and through it the IVF caches) alive until the
-    # caller releases it.
-    return unpersist_with(_census_from_knn(knn.select("src", "dst")), knn)
-
-
 def _x141_oracle() -> str:
     return f"""
-    WITH {_ivf_pairs_sql(keep_self=True)}
+    WITH {_ivf_pairs_sql()}
     {_rerank_sql_tail()}"""
 
 
 @query("x141_ivf_knn_graph", oracle=_x141_oracle())
 def x141_ivf_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF-candidate k-NN graph as a REGISTERED, oracle-paired
-    entry (VERDICT r10 item 1): the designated 100 TB census plan
-    finally carries driver CORRECTNESS evidence, not just pytest
-    recall gates.
+    """x44's k-NN graph over IVF-partitioned candidates.
+
+    The scale path for the census candidate wall (VERDICT r9 item 3),
+    registered and oracle-paired (VERDICT r10 item 1).
 
     Same contract as x44 (exact cosine rerank, top-KNN_K per source,
     deterministic tie-break — `_rerank_topk` is shared code) over
-    `_ivf_candidate_pairs` at the default knobs: N_CELLS codebook,
-    N_PROBE multi-probe, KNN_MAX_BUCKET primary-member skew cap. The
-    oracle regenerates bit-identical centroids via the QSCALE
-    quantized mean (the x62/x63 discipline that already proved IVF
-    assignment hash-exact cross-engine) and shares the rerank tail
-    with x44's oracle. At 100 TB ``n_cells`` scales with the corpus
-    (knobbed invocations void the oracle and warn, like x137's band
-    sizing): per-vector candidate volume is then FLAT under corpus
-    growth — 1,992.7/vec at ×10 → 2,001.5 at ×30 (SCALE.md r10) —
-    where the banded x44's grows unboundedly.
+    `_ivf_candidate_pairs`: N_CELLS codebook, N_PROBE multi-probe,
+    KNN_MAX_BUCKET primary-member skew cap. The oracle regenerates
+    bit-identical centroids via the QSCALE quantized mean (the x62/x63
+    discipline that already proved IVF assignment hash-exact
+    cross-engine) and shares the rerank tail with x44's oracle. With
+    the codebook scaled to the corpus, per-vector candidate volume is
+    FLAT under corpus growth — 1,992.7/vec at ×10 → 2,001.5 at ×30
+    (SCALE.md r10) — where the banded x44's grows unboundedly. Recall
+    floor pytest-gated in tests/test_similarity.py.
     """
-    return ivf_knn_graph(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = _ivf_candidate_pairs(emb)
+    # Lifetime chain: the rerank result holds `pairs` (via the
+    # finalizer closure), whose own finalizer releases the persisted
+    # centroid/assignment frames — without this the caches died the
+    # moment this function returned (weakref fires on the LOCAL frame)
+    # and every branch re-expanded the full IVF lineage.
+    return unpersist_with(_rerank_topk(pairs), pairs)
 
 
 def _x142_oracle() -> str:
     return f"""
-    WITH {_ivf_pairs_sql(keep_self=True)}, {_census_sql_tail()}"""
+    WITH {_ivf_pairs_sql()}, {_census_sql_tail()}"""
 
 
 @query("x142_ivf_triangle_census", oracle=_x142_oracle())
 def x142_ivf_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`triangle_census_ivf` at default knobs as a REGISTERED,
-    oracle-paired entry (VERDICT r10 item 1): the candidate-scale
-    census posture — x137b's degree-ordered triangle counting
-    (`_census_from_knn`, bit-shared) over the IVF k-NN graph — with
-    the same five-column census contract and a full DuckDB oracle
-    built from `_ivf_pairs_sql` + the shared `_census_sql_tail`.
-    Measured walls: 76 s at ×10 vs 200 s banded, exponent ≈1.23
-    (SCALE.md r10). This retires the banded-census
-    perf-weak flag: the scale-safe form is now driver-checked.
+    """x137b's degree-ordered census over the IVF k-NN graph (x141).
+
+    This is the answer to the x44 candidate wall behind the census
+    ops: the census joins were never the cost (SCALE.md r8) — the
+    banded candidate VOLUME was (85.2M pairs at 10x for a K=3 graph).
+    With the codebook scaled to corpus size, candidate volume per
+    vector is flat in corpus growth, so the whole census pipeline
+    scales linearly. The graph is the IVF approximation of the banded
+    graph (recall pytest-gated), so census COUNTS are approximate
+    relative to x137b's — the diagnostic reading (clustering
+    coefficient as manifold health) is unchanged, and the
+    IVF-vs-banded deltas are pinned by a pytest tolerance gate on the
+    sf0.001 graph. Same five-column census contract, with a full
+    DuckDB oracle built from `_ivf_pairs_sql` + the shared
+    `_census_sql_tail`. Measured walls: 76 s at ×10 vs 200 s banded,
+    exponent ≈1.23 (SCALE.md r10).
     """
-    return triangle_census_ivf(spark, sf_dir)
+    knn = x141_ivf_knn_graph(spark, sf_dir)
+    # Same lifetime chain as x141: the census result keeps the knn
+    # frame (and through it the IVF caches) alive until the caller
+    # releases it.
+    return unpersist_with(_census(knn.select("src", "dst"), oriented=True), knn)

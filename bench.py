@@ -94,8 +94,12 @@ HEADLINE_V2 = [
 ]
 
 
-def warm_up(spark, sf_dir: str) -> None:
-    """Bring a fresh session to steady state before anything is timed."""
+def warm_up(spark, sf_dir: str, errors: dict[str, str]) -> None:
+    """Bring a fresh session to steady state before anything is timed.
+
+    The headline plans are warmed on the ``sf0.01`` dir beside
+    ``sf_dir``; when there is none, or ``sf_dir`` is that dir, they are
+    timed half-warm and ``errors["warm_up"]`` says so."""
     # Warm the JVM + parquet footers so per-query timings measure the
     # engine, not session startup.
     QUERIES["g1_count_star"](spark, sf_dir).count()
@@ -119,11 +123,16 @@ def warm_up(spark, sf_dir: str) -> None:
     # run lives in, and what the sec/query comparison is about. (DuckDB
     # needs no analogue: it has no JIT; its first run IS steady-state.)
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir.rstrip("/"):
-        for _ in range(2):
-            for name in HEADLINE + HEADLINE_V2:
-                QUERIES[name](spark, warm_dir).count()
-            spark.catalog.clearCache()  # drop sf0.01 persisted frames
+    if not os.path.isdir(warm_dir) or warm_dir == sf_dir.rstrip("/"):
+        errors["warm_up"] = (
+            f"no sf0.01 dir beside {sf_dir}, or it is that dir: headline"
+            " plans timed without the JIT warm-up"
+        )
+        return
+    for _ in range(2):
+        for name in HEADLINE + HEADLINE_V2:
+            QUERIES[name](spark, warm_dir).count()
+        spark.catalog.clearCache()  # drop sf0.01 persisted frames
 
 
 def floor_probe(spark, sf_dir: str, errors: dict[str, str]) -> float | None:
@@ -171,7 +180,10 @@ def main() -> int:
         settled_wait += 5
     load_start = os.getloadavg()[0]
     spark = get_spark("bench")
-    warm_up(spark, sf_dir)
+    # A measurement that fails is recorded here (exception class and
+    # message), never silently dropped.
+    errors: dict[str, str] = {}
+    warm_up(spark, sf_dir, errors)
 
     # Min-of-reps: host noise is one-sided (a noisy-neighbor burst can
     # only ADD wall time), so min-of-reps is the standard steady-state
@@ -208,9 +220,6 @@ def main() -> int:
             # queries — each builds a distinct plan — but they would
             # accumulate memory across the loop).
             spark.catalog.clearCache()
-    # A measurement that fails is recorded here (exception class and
-    # message), never silently dropped.
-    errors: dict[str, str] = {}
     floor = floor_probe(spark, sf_dir, errors)
     # Echo the EFFECTIVE session geometry (VERDICT r13 item 2 / next-
     # round 2): the driver's low-core control run inferred whether

@@ -224,11 +224,11 @@ def main(argv: list[str]) -> int:
     warehouse = tempfile.mkdtemp(prefix="measure-warehouse-")
     spark = get_spark("measure", extra_conf={"spark.sql.warehouse.dir": warehouse})
     try:
-        warm_up(spark, sf_dir)
+        errors: dict[str, str] = {}
+        warm_up(spark, sf_dir, errors)
         host = HostSpeed(spark, spark.sparkContext.defaultParallelism)
         for rec in measure(spark, sf_dir, names, host=host, plans_dir=plans_dir):
             print(json.dumps(rec), flush=True)
-        errors: dict[str, str] = {}
         floor = floor_probe(spark, sf_dir, errors)
         print(json.dumps({
             "stamp": True,

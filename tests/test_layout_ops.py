@@ -97,16 +97,6 @@ def test_x116_target_is_never_shuffled(spark):
     assert df.count() > load_table(spark, SF_DIR, "customer").count()
 
 
-def test_x116_reads_its_source_from_cache(spark):
-    """The source aggregate feeds three joins and is persisted once. The
-    one-statement MERGE drops its temp views on return, which uncaches a
-    frame persisted before it: the plan must still scan the cache."""
-    from ask_duckdb_spark.plans import formatted_plan
-
-    plan = formatted_plan(QUERIES["x116_merge_upsert"](spark, SF_DIR))
-    assert "InMemoryTableScan" in plan, plan
-
-
 def test_x116_correct_when_source_cannot_broadcast(spark):
     """The docstring's degradation claim, executed: with broadcast
     joins disabled (the monster-source regime at 100 TB), AQE falls

@@ -29,7 +29,7 @@ def _measure_module():
 def test_sweep_records_layers_and_releases_caches(spark):
     measure = _measure_module()
     before = persisted_rdds(spark)
-    names = ["g1_count_star", "no_such_entry", "x116_merge_upsert"]
+    names = ["g1_count_star", "no_such_entry", "x27_ivf_topk"]
     recs = list(measure.measure(spark, SF_DIR, names, reps=2))
     assert [r["name"] for r in recs] == names
     assert recs[1]["error"].startswith("KeyError: "), recs[1]
@@ -42,7 +42,7 @@ def test_sweep_records_layers_and_releases_caches(spark):
         assert layers["jobs"] >= 1 and layers["tasks"] >= 1, rec
         for phase in ("analysis", "optimization", "planning"):
             assert f"phase_{phase}_ms" in layers, rec
-    # x116 persists its MERGE source; every rep released it
+    # x27 persists its IVF codebook; every rep released it
     assert persisted_rdds(spark) <= before
 
 
@@ -54,6 +54,21 @@ def test_profile_writes_plan_file(spark, tmp_path):
     assert "error" not in rec, rec
     plan = (tmp_path / "g1_count_star.txt").read_text()
     assert "Physical Plan" in plan
+
+
+def test_warm_up_without_sibling_sf001_is_recorded(spark, tmp_path):
+    """A dir with no ``sf0.01`` beside it cannot JIT-warm the headline
+    plans; the record says so instead of timing them half-warm."""
+    import bench
+
+    sf = tmp_path / "sfx"
+    sf.mkdir()
+    os.symlink(
+        os.path.join(SF_DIR, "lineitem.parquet"), sf / "lineitem.parquet"
+    )
+    errors: dict[str, str] = {}
+    bench.warm_up(spark, str(sf), errors)
+    assert "sf0.01" in errors.get("warm_up", ""), errors
 
 
 @pytest.fixture(scope="module")

@@ -42,3 +42,19 @@ def test_all_registry_outputs_atomic(spark):
         "registry entries return non-atomic columns (driver canonicalizer "
         f"cannot hash them): {offenders}"
     )
+
+
+def test_every_entry_takes_spark_and_sf_dir_only():
+    """The driver contract is ``queries()[name](spark, sf_dir)``. An
+    entry with a further parameter could be called with a value its
+    registered oracle was not generated from, and a wrapper around an
+    entry hides what the registry actually calls."""
+    import inspect
+
+    bad = {
+        name: list(inspect.signature(fn).parameters)
+        for name, fn in QUERIES.items()
+        if len(inspect.signature(fn).parameters) != 2
+        or hasattr(fn, "__wrapped__")
+    }
+    assert not bad, bad

@@ -283,14 +283,14 @@ def test_x63_hier_recall_comparable_to_flat_at_equal_granularity(spark):
     from ask_duckdb_spark.operators.similarity import (
         N_COARSE,
         N_FINE,
-        x62_semdedup,
+        _flat_semdedup,
         x63_semdedup_hier,
     )
 
     from tests.conftest import SF_DIR
 
     sf = SF_DIR
-    flat = x62_semdedup(spark, sf, n_cells=N_COARSE * N_FINE).toPandas()
+    flat = _flat_semdedup(spark, sf, N_COARSE * N_FINE).toPandas()
     hier = x63_semdedup_hier(spark, sf).toPandas()
     n_flat = int((~flat.kept).sum())
     n_hier = int((~hier.kept).sum())
@@ -451,10 +451,7 @@ def test_ivf_knn_graph_recall_vs_brute_force(spark):
     from pyspark.sql import functions as F
 
     from ask_duckdb_spark.functions.vectors import cosine_similarity
-    from ask_duckdb_spark.operators.similarity import (
-        KNN_K,
-        ivf_knn_graph,
-    )
+    from ask_duckdb_spark.operators.similarity import KNN_K
     from ask_duckdb_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_DIR_001, "embeddings")
@@ -471,7 +468,8 @@ def test_ivf_knn_graph_recall_vs_brute_force(spark):
         .collect()
     }
     got = {
-        (r.src, r.dst) for r in ivf_knn_graph(spark, SF_DIR_001).collect()
+        (r.src, r.dst)
+        for r in QUERIES["x141_ivf_knn_graph"](spark, SF_DIR_001).collect()
     }
     n_vec = emb.count()
     assert len(got) >= 0.95 * n_vec * KNN_K, "IVF graph starves vectors"
@@ -480,12 +478,10 @@ def test_ivf_knn_graph_recall_vs_brute_force(spark):
 
 
 def test_triangle_census_ivf_schema_and_sanity(spark):
-    """The IVF census shares x137b's census code (_census_from_knn),
+    """The IVF census shares x137b's census code (_census),
     so schema and internal identities must hold; counts are the IVF
     graph's own (approximate vs x137b by construction)."""
-    from ask_duckdb_spark.operators.similarity import triangle_census_ivf
-
-    rows = triangle_census_ivf(spark, SF_DIR_001).collect()
+    rows = QUERIES["x142_ivf_triangle_census"](spark, SF_DIR_001).collect()
     assert len(rows) == 1
     r = rows[0]
     assert list(rows[0].asDict()) == [
@@ -508,10 +504,9 @@ def test_triangle_census_ivf_diagnostic_parity_vs_banded(spark):
     without admitting a broken graph. (sf0.001 — conftest.SF_DIR; at
     sf0.01 the deltas widen to ~15% cc, the trial-×1 regime.)"""
     from ask_duckdb_spark.operators.registry import QUERIES
-    from ask_duckdb_spark.operators.similarity import triangle_census_ivf
     from tests.conftest import SF_DIR
 
-    ivf = triangle_census_ivf(spark, SF_DIR).collect()[0]
+    ivf = QUERIES["x142_ivf_triangle_census"](spark, SF_DIR).collect()[0]
     banded = QUERIES["x137b_triangle_census_graph"](
         spark, SF_DIR
     ).collect()[0]

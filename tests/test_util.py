@@ -48,51 +48,6 @@ def test_exact_money_helpers_roundtrip(spark):
     assert row[0].fr == 59.97
 
 
-def test_non_default_knobs_warn_registry_wide(spark):
-    """Non-default knobs VOID the registered oracle pairing; the call
-    must say so loudly. VERDICT r5 item 5 added this to x62/x63 ad hoc;
-    VERDICT r7 item 6 moved the guard into the @query decorator — EVERY
-    oracle-paired operator with knob parameters gets it at
-    registration, so a new knobbed operator cannot forget it."""
-    import inspect
-    import warnings
-
-    from ask_duckdb_spark.operators import ORACLES, QUERIES
-    from ask_duckdb_spark.operators.similarity import (
-        x62_semdedup,
-        x63_semdedup_hier,
-    )
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        x62_semdedup(spark, "/root/testdata/sf0.001", n_cells=16)
-        x63_semdedup_hier(spark, "/root/testdata/sf0.001", n_coarse=3)
-    texts = [str(x.message) for x in w]
-    assert any("x62_semdedup" in t and "VOID" in t for t in texts)
-    assert any("x63_semdedup_hier" in t and "VOID" in t for t in texts)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        x62_semdedup(spark, "/root/testdata/sf0.001")  # defaults: silent
-        # explicitly passing the DEFAULT stays silent too (composed
-        # operators thread knob=None through, e.g. x137 -> x44)
-        QUERIES["x44_knn_graph"](spark, "/root/testdata/sf0.001", band_bits=None)
-    assert not [x for x in w if "VOID" in str(x.message)]
-    # plan-only: every oracle-paired knobbed registry entry is wrapped
-    for name, fn in QUERIES.items():
-        if name in ORACLES and len(inspect.signature(fn).parameters) > 2:
-            assert hasattr(fn, "__wrapped__"), f"{name} missing knob guard"
-    # x117's non-None default knob warns on a non-default value
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        QUERIES["x117_bloom_semijoin"](
-            spark, "/root/testdata/sf0.001", m_bits=1 << 18
-        )
-    assert any(
-        "x117_bloom_semijoin" in str(x.message) and "VOID" in str(x.message)
-        for x in w
-    )
-
-
 def test_tokenizer_whitespace_class_is_engine_portable(spark):
     """r8 sweep gate: the shared tokenizer must split on \\x0B (vertical
     tab) IDENTICALLY on both engines. Before the explicit WS_CLASS
