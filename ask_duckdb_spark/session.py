@@ -8,13 +8,24 @@ Catalyst plays DuckDB's role. Two entry paths:
 - :func:`apply_runtime_conf` pins the runtime-settable confs on an
   *existing* session (the driver harness owns its own session); it is
   idempotent and safe to call per-query.
+
+Start-up is the largest wait a one-shot run sees, and it is
+single-threaded class initialization. :func:`get_spark` trims it two
+ways. It skips MLlib's classpath session extension
+(``org.apache.spark.sql.ml.InternalFunctionRegistration``, see
+:data:`BUILDER_CONF`). When it has to launch the JVM, it initializes the
+SQL layer's classes (:data:`PRELOAD_CLASSES`) on one background JVM
+thread while the SparkContext starts on the caller's.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import warnings
 
+from py4j.protocol import Py4JError
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 #: Confs that are runtime-settable on any session and required for
@@ -68,7 +79,46 @@ BUILDER_CONF: dict[str, str] = {
     # Arrow batch size for pandas UDF stages: large enough to amortize
     # transfer, small enough to bound per-batch memory at scale.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Skip the SparkSessionExtensionsProvider scan of the classpath. The
+    # one provider in Spark's jars is MLlib's, which registers three
+    # internal Spark Connect ML functions (vector_to_array,
+    # array_to_vector, aggregate_metrics) that nothing here calls and
+    # the reference's DuckDB SQL cannot name. It adds no analyzer or
+    # optimizer rule, so no plan changes; loading it (and the Scala
+    # reflection it pulls in) cost ~2 s of every session start on a
+    # 4-core host.
+    "spark.sql.extensions.test.loadFromCp": "false",
 }
+
+#: Classes the first session, the first view read and the first Arrow
+#: frame initialize, in that order. :func:`get_spark` initializes them
+#: on one background JVM thread while the SparkContext starts; one
+#: thread beat one thread per class, which contend with each other.
+PRELOAD_CLASSES: tuple[str, ...] = (
+    "org.apache.spark.sql.catalyst.analysis.FunctionRegistry$",
+    "org.apache.spark.sql.catalyst.parser.SqlBaseLexer",
+    "org.apache.spark.sql.catalyst.parser.SqlBaseParser",
+    "org.apache.spark.sql.catalyst.analysis.Analyzer",
+    "org.apache.spark.sql.execution.SparkOptimizer",
+    "org.apache.spark.sql.internal.BaseSessionStateBuilder",
+    "org.apache.spark.sql.execution.datasources.DataSource$",
+    "org.apache.spark.sql.execution.datasources.FileSourceStrategy$",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat",
+    "org.apache.spark.sql.util.ArrowUtils$",
+    "org.apache.arrow.memory.RootAllocator",
+    "org.apache.spark.sql.execution.arrow.ArrowConverters$",
+)
+
+
+def _preload_classes(jvm) -> None:
+    """Initialize :data:`PRELOAD_CLASSES` on ``jvm``. Only class
+    initialization: no SparkContext or session call, no Python lock. A
+    name that does not resolve is skipped (it loses only its overlap)."""
+    for name in PRELOAD_CLASSES:
+        try:
+            jvm.java.lang.Class.forName(name)
+        except Py4JError:
+            pass
 
 
 def default_parallelism() -> int:
@@ -118,19 +168,25 @@ def get_spark(
     total executor cores (or left to AQE's coalescing with a high
     initial value). Everything else is runtime conf shared with
     :func:`apply_runtime_conf`.
+
+    When no JVM is running yet, this launches it first, with the same
+    conf ``getOrCreate`` gets (so ``-Xmx`` and extraJavaOptions reach
+    it), and starts the class preload before the SparkContext; nothing
+    joins that daemon thread.
     """
     cpus = default_parallelism()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    builder = SparkSession.builder.master(master).appName(app_name)
-    conf: dict[str, str] = {}
+    conf: dict[str, str] = {"spark.master": master, "spark.app.name": app_name}
     conf.update(BUILDER_CONF)
     conf.update(RUNTIME_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if SparkContext._gateway is None:
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+        threading.Thread(target=_preload_classes, args=(SparkContext._jvm,),
+                         name="spark-class-preload", daemon=True).start()
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate may have returned a pre-existing session: re-pin.
     apply_runtime_conf(spark)

@@ -1,5 +1,6 @@
-"""Shared fixtures: one tuned SparkSession per test run (JVM startup is
-~10 s — reuse it), the smallest fixture dir, and the queuedata table."""
+"""Shared fixtures: one tuned SparkSession per test run (a fresh one
+takes ~6 s to start on a 4-core host — reuse it), the smallest fixture
+dir, and the queuedata table."""
 
 from __future__ import annotations
 

@@ -1,12 +1,22 @@
-"""Runtime conf pinning on an existing session (session.apply_runtime_conf)."""
+"""Session start-up: runtime conf pinning on an existing session
+(session.apply_runtime_conf), the skipped MLlib extension, the class
+preload list, and a one-shot CLI run on a fresh JVM."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import warnings
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
-from ask_duckdb_spark.session import RUNTIME_CONF, apply_runtime_conf
+from ask_duckdb_spark.session import PRELOAD_CLASSES, RUNTIME_CONF, apply_runtime_conf
+
+from conftest import SF_DIR
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class _Conf:
@@ -50,3 +60,43 @@ def test_apply_runtime_conf_warns_on_unsettable_conf_and_goes_on():
         warnings.simplefilter("error")
         apply_runtime_conf(session)
     assert conf.calls == []
+
+
+def test_mllib_session_extension_stays_off(spark):
+    """get_spark skips MLlib's classpath SparkSessionExtensionsProvider,
+    so its three functions are absent (a Spark upgrade that renames the
+    skipping conf brings them back and fails here). They go to Spark's
+    internal function registry, the one ``Column.internalFn`` resolves,
+    not the catalog's, so ``spark.catalog.functionExists`` cannot see
+    them either way."""
+    jvm = spark.sparkContext._jvm
+    module = getattr(jvm.org.apache.spark.sql.catalyst.analysis, "FunctionRegistry$")
+    registry = getattr(module, "MODULE$").internal()
+    ident = jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+    for name in ("vector_to_array", "array_to_vector", "aggregate_metrics"):
+        assert not registry.functionExists(ident.apply(name)), name
+
+
+def test_preload_classes_resolve(spark):
+    """Every preloaded class exists on the session's JVM: a renamed one
+    would otherwise be skipped silently and lose its start-up overlap."""
+    jvm = spark.sparkContext._jvm
+    missing = []
+    for name in PRELOAD_CLASSES:
+        try:
+            jvm.java.lang.Class.forName(name)
+        except Py4JJavaError:
+            missing.append(name)
+    assert not missing
+
+
+def test_cli_sql_one_shot_on_a_fresh_jvm():
+    """One ``cli.sql`` run in its own process: JVM launch, class preload
+    and session start under a time limit, so a start-up hang (say, a
+    class-initialization deadlock) fails here instead of hanging."""
+    proc = subprocess.run(
+        [sys.executable, "-m", "ask_duckdb_spark.cli.sql", "--sf-dir", SF_DIR,
+         "--table", "lineitem", "--query", "SELECT count(*) AS n FROM lineitem"],
+        cwd=ROOT, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "=== Query result (1 rows) ===" in proc.stdout, proc.stdout
