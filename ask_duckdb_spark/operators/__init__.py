@@ -22,107 +22,3 @@ from . import profile  # noqa: F401,E402
 from . import layout  # noqa: F401,E402
 from . import stats_audit  # noqa: F401,E402
 from . import hygiene  # noqa: F401,E402
-
-# The driver's per-round correctness harness verifies the FIRST 50
-# registry entries in iteration order. History: r2 verified the
-# relational core; r3 the NL pipeline + X families; r4 the dialect
-# surface; r5-r6 the scale extensions; r7 the r6 red trio (fixed) +
-# the layout/retrieval families; r8 closed 50/50 full-pass (the
-# x133-x137 hygiene/census block + the r02-stale relational core);
-# r9 closed 50/50 again (x138-x140/x117b + the x44-restructure
-# consumers + the r02/r03 relational+NL tail).
-#
-# ROUND-12 WINDOW (active), per VERDICT r11 items 1 and 3: no new
-# surface this round (judge item 7) — the window is plan-changed
-# entries first, then a pure staleness rotation. Lead: the six
-# entries whose contract/plan changed THIS round and therefore need
-# fresh driver evidence (x2f gains x2's pair-set oracle and drops the
-# hash-family-dependent estimate column, judge item 3; x4f's rows-only
-# status is re-documented as by-design — its pair set is provably
-# hash-family-dependent, see tests/test_fastpath.py — and re-evidenced;
-# x132 gets its grid discipline enforced in code with the oracle
-# updated in lockstep, judge item 6; and the judge-item-2 plan audits
-# rewrote x116 — MERGE decomposed so the target is never shuffled —
-# and cut the PK-build distinct from x117/x117b, so those three
-# joined the lead MID-ROUND, displacing three unchanged r07 rows
-# x83/x85/x90 that stay at r7 either way — the freshness invariant
-# "every entry >= r7" is unharmed and the changed plans get
-# same-round oracle evidence). Then the complete 28-entry r06 tail
-# (the judge-traced stalest evidence anywhere), then 16 from the
-# oldest r07 block. Still stale after this window: the remaining 28
-# r07 rows (x101/x104/x106/x107/x113, the x115-x131 layout/stats band
-# minus x116/x117/x117b, x83/x85/x90/x92/x94, and the inherently
-# rows-only x54/x67) — keep walking in r13.
-_VERIFY_FIRST = [
-    # Contract/plan-changed this round (VERDICT r11 items 3 and 6,
-    # plus the item-2 audit rewrites)
-    "x2f_minhash_neardup_fast",
-    "x4f_simhash_fast",
-    "x132_ks_drift",
-    "x116_merge_upsert",
-    "x117_bloom_semijoin",
-    "x117b_plain_semijoin",
-    # The full r06-stale tail (VERDICT r11 item 1, all 28)
-    "x28b_user_value_trend_sql",
-    "x70_kmeans_lloyd",
-    "x71_mixture_sample",
-    "x72_cell_exemplars",
-    "x73_source_divergence",
-    "x74_neardup_eval",
-    "x76_bm25_topk",
-    "x77_zipf_slope",
-    "x78_curriculum_bins",
-    "x80_cc_star",
-    "x82_source_card",
-    "x84_truncation_recall",
-    "x86_novelty_ratio",
-    "x87_ann_recall_eval",
-    "x88_source_novelty",
-    "x89_hybrid_rrf",
-    "x91_containment_pairs",
-    "x93_mean_surprisal",
-    "x95_vocab_coverage",
-    "x96_leakage_safe_split",
-    "x97_late_event_audit",
-    "x98_mixture_deficiency",
-    "x99_dup_source_attribution",
-    "x109_session_transitions",
-    "x110_interarrival_percentiles",
-    "x111_conversion_time",
-    "x112_norm_audit",
-    "x114_fk_audit",
-    # Oldest r07 tail: fills to 50 (judge-named head first)
-    "f14_math",
-    "g10_approx_count_distinct",
-    "q2_min_cost_supplier",
-    "q20_excess_shipments",
-    "w7_percent_rank_cume",
-    "x10_quality_score",
-    "x22_tfidf_top_term",
-    "x37_quantile_sketch",
-    "x39_repetition_ratio",
-    "x43_quantize_error",
-    "x64_paragraph_dedup",
-    "x65_pq_adc_topk",
-    "x68_repeated_window_spans",
-    "x75_hard_negatives",
-    "x79_vocab_growth",
-    "x81_token_budget_select",
-]
-
-
-def _reorder(priority: list[str]) -> None:
-    """Rebuild the registry dicts with ``priority`` names first.
-
-    Names in ``priority`` not (yet) registered are skipped, so the list
-    may reference operators added later in the round.
-    """
-    ordered = [n for n in priority if n in QUERIES]
-    ordered += [n for n in QUERIES if n not in set(ordered)]
-    for d in (QUERIES, ORACLES):
-        snapshot = {n: d[n] for n in ordered if n in d}
-        d.clear()
-        d.update(snapshot)
-
-
-_reorder(_VERIFY_FIRST)

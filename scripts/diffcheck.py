@@ -9,6 +9,11 @@ x28b lesson: a tolerance compare here passed three rounds of queries the
 driver hashed red). ``--tol`` restores the old 1e-9 tolerance compare
 for exploratory use only; evidence claims must come from the default.
 
+``check`` is the per-entry check and ``compare`` the repo's one
+Spark-vs-DuckDB comparator: tier-1 runs ``check`` over the whole
+registry (tests/test_oracle_parity.py) and the fuzz suite over
+generated fixtures (tests/test_fuzz_differential.py).
+
 Usage: python scripts/diffcheck.py [--sf /root/testdata/sf0.01] [--tol] [names...]
 """
 
@@ -91,6 +96,39 @@ def compare(
     return problems
 
 
+def check(
+    spark, con, name: str, sf_dir: str, exact: bool = True
+) -> tuple[str, list[str], int]:
+    """Run one registry entry on Spark, then its DuckDB oracle on
+    ``con`` (views over the same ``sf_dir``), and compare.
+
+    Returns ``(status, problems, n_rows)``: status is ``PASS``,
+    ``VACUOUS`` (a pass on 0 rows, which proves nothing), ``FAIL`` or,
+    for an entry without an oracle, ``ROWS-ONLY``; ``n_rows`` is the
+    Spark side's row count.
+    """
+    try:
+        sdf = QUERIES[name](spark, sf_dir).toPandas()
+    except Exception as e:
+        return "FAIL", [f"spark raised {type(e).__name__}: {e}"], 0
+    finally:
+        # Operators that persist() intermediates feeding multiple
+        # consumers (x2's signatures, x27's centroids, x29's labels,
+        # x38's sketch) cannot unpersist before their result is
+        # consumed; the long-lived caller is the owner of cleanup.
+        spark.catalog.clearCache()
+    if name not in ORACLES:
+        return "ROWS-ONLY", [], len(sdf)
+    try:
+        ddf = con.sql(ORACLES[name]).df()
+    except Exception as e:
+        return "FAIL", [f"oracle raised {type(e).__name__}: {e}"], len(sdf)
+    problems = compare(sdf, ddf, exact=exact)
+    if problems:
+        return "FAIL", problems, len(sdf)
+    return ("PASS" if len(sdf) else "VACUOUS"), [], len(sdf)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -119,39 +157,21 @@ def main() -> int:
     con = duckdb_conn(args.sf)
     n_pass = n_fail = n_rows_only = 0
     for name in names:
-        fn = QUERIES[name]
         t0 = time.time()
-        try:
-            sdf = fn(spark, args.sf).toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark raised {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        finally:
-            # Operators that persist() intermediates feeding multiple
-            # consumers (x2's signatures, x27's centroids, x29's labels,
-            # x38's sketch) cannot unpersist before their result is
-            # consumed; the long-lived harness is the owner of cleanup.
-            spark.catalog.clearCache()
+        status, problems, n_rows = check(
+            spark, con, name, args.sf, exact=not args.tol
+        )
         dt = time.time() - t0
-        if name not in ORACLES:
-            tag = "ROWS-ONLY" if len(sdf) > 0 else "ROWS-ONLY(EMPTY!)"
-            print(f"{tag} {name}: {len(sdf)} rows [{dt:.1f}s]")
-            n_rows_only += 1
-            continue
-        try:
-            ddf = con.sql(ORACLES[name]).df()
-        except Exception as e:
-            print(f"FAIL {name}: oracle raised {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        problems = compare(sdf, ddf, exact=not args.tol)
-        if problems:
+        if status == "FAIL":
             print(f"FAIL {name}: {problems[:3]}")
             n_fail += 1
+        elif status == "ROWS-ONLY":
+            tag = "ROWS-ONLY" if n_rows else "ROWS-ONLY(EMPTY!)"
+            print(f"{tag} {name}: {n_rows} rows [{dt:.1f}s]")
+            n_rows_only += 1
         else:
-            empty = " (0 rows — vacuous)" if len(sdf) == 0 else ""
-            print(f"PASS {name}: {len(sdf)} rows [{dt:.1f}s]{empty}")
+            empty = " (0 rows — vacuous)" if status == "VACUOUS" else ""
+            print(f"PASS {name}: {n_rows} rows [{dt:.1f}s]{empty}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0

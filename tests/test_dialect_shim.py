@@ -11,13 +11,11 @@ that drops one of them fails loudly here.
 from __future__ import annotations
 
 import math
-import os
 
-import duckdb
 import pytest
 
 from ask_duckdb_spark.nl.dialect_shim import to_spark_sql
-from ask_duckdb_spark.sources.catalog import register_views
+from ask_duckdb_spark.sources.catalog import duckdb_conn, register_views
 from tests.conftest import SF_DIR
 
 # DuckDB-flavored queries the shim must translate. All run against the
@@ -74,11 +72,7 @@ NATIVE = {
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in ("orders", "events", "documents", "part", "region"):
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
+    return duckdb_conn(SF_DIR)
 
 
 @pytest.fixture(scope="module")

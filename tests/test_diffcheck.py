@@ -12,29 +12,13 @@ columns still compare bit-exact.
 
 from __future__ import annotations
 
-import importlib.util
-import os
-import sys
-
 import duckdb
 import pandas as pd
-import pytest
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-@pytest.fixture(scope="module")
-def diffcheck():
-    spec = importlib.util.spec_from_file_location(
-        "diffcheck", os.path.join(_ROOT, "scripts", "diffcheck.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["diffcheck"] = mod
-    spec.loader.exec_module(mod)
-    return mod
+import scripts.diffcheck as diffcheck
 
 
-def test_int_vs_float_dtype_mismatch_fails(diffcheck):
+def test_int_vs_float_dtype_mismatch_fails():
     a = pd.DataFrame({"v": pd.array([1, 2, 3], dtype="int64")})
     b = pd.DataFrame({"v": pd.array([1.0, 2.0, 3.0], dtype="float64")})
     problems = diffcheck.compare(a, b)
@@ -42,7 +26,7 @@ def test_int_vs_float_dtype_mismatch_fails(diffcheck):
     assert "dtype mismatch" in problems[0]
 
 
-def test_bare_windowed_sum_oracle_fails_then_cast_passes(diffcheck):
+def test_bare_windowed_sum_oracle_fails_then_cast_passes():
     """A bare DuckDB ``sum(BIGINT) OVER`` yields HUGEINT -> float64 in
     pandas; against Spark's int64 running sum the driver hash differs.
     The comparator must reproduce that red locally, and the documented
@@ -68,14 +52,14 @@ def test_bare_windowed_sum_oracle_fails_then_cast_passes(diffcheck):
     assert diffcheck.compare(spark_side, cast) == []
 
 
-def test_float_float_still_bit_exact(diffcheck):
+def test_float_float_still_bit_exact():
     a = pd.DataFrame({"v": [0.1, 0.2]})
     assert diffcheck.compare(a, a.copy()) == []
     b = pd.DataFrame({"v": [0.1, 0.2 + 1e-16]})
     assert diffcheck.compare(a, b), "1-ulp drift must still FAIL bit-exact"
 
 
-def test_int_int_unaffected(diffcheck):
+def test_int_int_unaffected():
     a = pd.DataFrame({"v": pd.array([5, 7], dtype="int64")})
     b = pd.DataFrame({"v": pd.array([5, 7], dtype="int64")})
     assert diffcheck.compare(a, b) == []

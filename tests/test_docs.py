@@ -26,7 +26,11 @@ def test_operators_md_in_sync_with_registry():
 def test_survey_registry_counts_match():
     from ask_duckdb_spark.operators import ORACLES, QUERIES
 
-    survey = open(os.path.join(REPO, "SURVEY.md")).read()
-    m = re.search(r"\*\*(\d+) `queries\(\)` entries, (\d+) with DuckDB", survey)
-    assert m, "SURVEY §8 registry line missing"
-    assert (int(m.group(1)), int(m.group(2))) == (len(QUERIES), len(ORACLES))
+    for doc, pattern in (
+        ("SURVEY.md", r"\*\*(\d+) `queries\(\)` entries, (\d+) with DuckDB"),
+        ("README.md", r"(\d+) registered queries, (\d+) with DuckDB"),
+    ):
+        m = re.search(pattern, open(os.path.join(REPO, doc)).read())
+        assert m, f"{doc} registry count line missing"
+        counts = (int(m.group(1)), int(m.group(2)))
+        assert counts == (len(QUERIES), len(ORACLES)), doc

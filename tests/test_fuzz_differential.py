@@ -3,9 +3,9 @@
 The fixed fixtures exercise one data distribution; these tests generate
 adversarial miniature corpora (empty text, whitespace-only, unicode,
 single-token docs, exact duplicates) with hypothesis and assert the
-Spark result still matches the registered DuckDB oracle value-for-value
-— the same comparison discipline as scripts/diffcheck.py, applied to
-inputs nobody hand-picked.
+Spark result still matches the registered DuckDB oracle bit-exact —
+scripts/diffcheck.py's per-entry check, applied to inputs nobody
+hand-picked.
 
 Ops under fuzz are the string-edge-sensitive ones whose oracles take no
 table but ``documents``: token stats (x8), quality gate (x10),
@@ -21,17 +21,17 @@ Spark's array_join gives '' -> 0.0; fixed with coalesce in the oracle.
 
 from __future__ import annotations
 
+import datetime
 import os
 import tempfile
 
-import duckdb
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from ask_duckdb_spark.operators import ORACLES, QUERIES
+import scripts.diffcheck as diffcheck
+from ask_duckdb_spark.sources.catalog import duckdb_conn
 
 # words mix ascii, unicode, digits and an empty-ish fragment; texts mix
 # normal spacing with runs of whitespace
@@ -70,8 +70,8 @@ def corpus(draw):
     return texts
 
 
-def _write_corpus(texts: list[str], d: str) -> None:
-    tbl = pa.table(
+def _documents(texts: list[str]) -> pa.Table:
+    return pa.table(
         {
             "doc_id": pa.array(range(len(texts)), pa.int64()),
             "text": pa.array(texts, pa.string()),
@@ -80,62 +80,17 @@ def _write_corpus(texts: list[str], d: str) -> None:
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
         }
     )
-    pq.write_table(tbl, os.path.join(d, "documents.parquet"))
 
 
-def _canon_dates(df: pd.DataFrame) -> pd.DataFrame:
-    """Map DATE-typed columns to a common representation: Spark's
-    toPandas yields object cells of datetime.date while DuckDB's df()
-    yields datetime64[us] — same values, different dtypes (the same
-    normalization scripts/diffcheck.py applies)."""
-    import datetime
-
-    df = df.copy()
-    for c in df.columns:
-        col = df[c]
-        if str(col.dtype).startswith("datetime"):
-            df[c] = col.astype("datetime64[us]")
-        elif col.dtype == object:
-            nn = col.dropna()
-            if len(nn) and isinstance(nn.iloc[0], datetime.date):
-                df[c] = pd.to_datetime(col).astype("datetime64[us]")
-    return df
-
-
-def _compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> None:
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"rowcount spark={len(spark_pdf)} duck={len(duck_pdf)}"
-    )
-    spark_pdf, duck_pdf = _canon_dates(spark_pdf), _canon_dates(duck_pdf)
-    a = spark_pdf.reindex(sorted(spark_pdf.columns), axis=1)
-    b = duck_pdf.reindex(sorted(duck_pdf.columns), axis=1)
-    assert list(a.columns) == list(b.columns)
-    cols = list(a.columns)
-    a = a.sort_values(cols, kind="mergesort").reset_index(drop=True)
-    b = b.sort_values(cols, kind="mergesort").reset_index(drop=True)
-    for c in cols:
-        av, bv = a[c], b[c]
-        if pd.api.types.is_float_dtype(av) or pd.api.types.is_float_dtype(bv):
-            assert (
-                (av.fillna(-1e308) - bv.fillna(-1e308)).abs() < 1e-9
-            ).all(), c
-        else:
-            assert av.astype(object).where(pd.notna(av), None).tolist() == (
-                bv.astype(object).where(pd.notna(bv), None).tolist()
-            ), c
-
-
-def _fuzz_one(spark, name: str, texts: list[str]) -> None:
+def _fuzz(spark, name: str, **tables: pa.Table) -> None:
+    """Write ``tables`` as the fixture dir of one example and run
+    ``name`` on Spark and its oracle on DuckDB over it, bit-exact."""
     with tempfile.TemporaryDirectory() as d:
-        _write_corpus(texts, d)
-        got = QUERIES[name](spark, d).toPandas()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"'{os.path.join(d, 'documents.parquet')}'"
-        )
-        want = con.sql(ORACLES[name]).df()
-        _compare(got, want)
+        for t, tbl in tables.items():
+            pq.write_table(tbl, os.path.join(d, f"{t}.parquet"))
+        with duckdb_conn(d) as con:
+            status, problems, _ = diffcheck.check(spark, con, name, d)
+    assert status in ("PASS", "VACUOUS"), problems
 
 
 #: Suite default 5 examples/op keeps the file under ~3 min; a deep
@@ -151,43 +106,43 @@ _FUZZ_SETTINGS = settings(
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x8_token_stats(spark, texts):
-    _fuzz_one(spark, "x8_token_stats", texts)
+    _fuzz(spark, "x8_token_stats", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x10_quality_score(spark, texts):
-    _fuzz_one(spark, "x10_quality_score", texts)
+    _fuzz(spark, "x10_quality_score", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x35_dedup_normalized(spark, texts):
-    _fuzz_one(spark, "x35_dedup_normalized", texts)
+    _fuzz(spark, "x35_dedup_normalized", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x86_novelty_ratio(spark, texts):
-    _fuzz_one(spark, "x86_novelty_ratio", texts)
+    _fuzz(spark, "x86_novelty_ratio", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x1_dedup_exact(spark, texts):
-    _fuzz_one(spark, "x1_dedup_exact", texts)
+    _fuzz(spark, "x1_dedup_exact", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x12_fingerprint(spark, texts):
-    _fuzz_one(spark, "x12_fingerprint", texts)
+    _fuzz(spark, "x12_fingerprint", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x77_zipf_slope(spark, texts):
-    _fuzz_one(spark, "x77_zipf_slope", texts)
+    _fuzz(spark, "x77_zipf_slope", documents=_documents(texts))
 
 
 # r7 hygiene family: doc 0 is always in the eval slice (0 % EVAL_MOD
@@ -198,19 +153,19 @@ def test_fuzz_x77_zipf_slope(spark, texts):
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x133_eval_decontam(spark, texts):
-    _fuzz_one(spark, "x133_eval_decontam", texts)
+    _fuzz(spark, "x133_eval_decontam", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x134_tokenizer_fertility(spark, texts):
-    _fuzz_one(spark, "x134_tokenizer_fertility", texts)
+    _fuzz(spark, "x134_tokenizer_fertility", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x135_charclass_audit(spark, texts):
-    _fuzz_one(spark, "x135_charclass_audit", texts)
+    _fuzz(spark, "x135_charclass_audit", documents=_documents(texts))
 
 
 # ---------------------------------------------------------------------------
@@ -236,8 +191,8 @@ def embeddings(draw):
     return [(i, v, l) for (i, v), l in zip(vecs, labels)]
 
 
-def _write_embeddings(rows, d: str) -> None:
-    tbl = pa.table(
+def _embeddings(rows) -> pa.Table:
+    return pa.table(
         {
             "vec_id": pa.array([r[0] for r in rows], pa.int64()),
             "embedding": pa.array(
@@ -246,32 +201,18 @@ def _write_embeddings(rows, d: str) -> None:
             "label": pa.array([r[2] for r in rows], pa.int32()),
         }
     )
-    pq.write_table(tbl, os.path.join(d, "embeddings.parquet"))
-
-
-def _fuzz_emb(spark, name: str, rows) -> None:
-    with tempfile.TemporaryDirectory() as d:
-        _write_embeddings(rows, d)
-        got = QUERIES[name](spark, d).toPandas()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            f"'{os.path.join(d, 'embeddings.parquet')}'"
-        )
-        want = con.sql(ORACLES[name]).df()
-        _compare(got, want)
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x75_hard_negatives(spark, rows):
-    _fuzz_emb(spark, "x75_hard_negatives", rows)
+    _fuzz(spark, "x75_hard_negatives", embeddings=_embeddings(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x84_truncation_recall(spark, rows):
-    _fuzz_emb(spark, "x84_truncation_recall", rows)
+    _fuzz(spark, "x84_truncation_recall", embeddings=_embeddings(rows))
 
 
 def test_zero_vector_corpus_x75_x84_match_oracle(spark):
@@ -284,8 +225,8 @@ def test_zero_vector_corpus_x75_x84_match_oracle(spark):
         (2, [0.5] * 16, 1),
         (3, [-1.0] + [0.0] * 15, 1),
     ]
-    _fuzz_emb(spark, "x75_hard_negatives", rows)
-    _fuzz_emb(spark, "x84_truncation_recall", rows)
+    _fuzz(spark, "x75_hard_negatives", embeddings=_embeddings(rows))
+    _fuzz(spark, "x84_truncation_recall", embeddings=_embeddings(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -320,8 +261,8 @@ def events(draw):
     return rows
 
 
-def _write_events(rows, d: str) -> None:
-    tbl = pa.table(
+def _events(rows) -> pa.Table:
+    return pa.table(
         {
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
             "ts": pa.array(
@@ -333,26 +274,12 @@ def _write_events(rows, d: str) -> None:
             "props": pa.array([r[5] for r in rows], pa.string()),
         }
     )
-    pq.write_table(tbl, os.path.join(d, "events.parquet"))
-
-
-def _fuzz_events(spark, name: str, rows) -> None:
-    with tempfile.TemporaryDirectory() as d:
-        _write_events(rows, d)
-        got = QUERIES[name](spark, d).toPandas()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"'{os.path.join(d, 'events.parquet')}'"
-        )
-        want = con.sql(ORACLES[name]).df()
-        _compare(got, want)
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x28b_user_value_trend(spark, rows):
-    _fuzz_events(spark, "x28b_user_value_trend_sql", rows)
+    _fuzz(spark, "x28b_user_value_trend_sql", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -360,19 +287,19 @@ def test_fuzz_x28b_user_value_trend(spark, rows):
 def test_fuzz_x28_user_value_trend_pandas(spark, rows):
     # the grouped-map twin shares TREND_ORACLE: Python-int sufficient
     # statistics must be bit-identical to the SQL sides on any corpus
-    _fuzz_events(spark, "x28_user_value_trend", rows)
+    _fuzz(spark, "x28_user_value_trend", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x13_sessionize(spark, rows):
-    _fuzz_events(spark, "x13_sessionize", rows)
+    _fuzz(spark, "x13_sessionize", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x15_tumbling_window(spark, rows):
-    _fuzz_events(spark, "x15_tumbling_window", rows)
+    _fuzz(spark, "x15_tumbling_window", events=_events(rows))
 
 
 def test_short_doc_corpus_minhash_family_matches_oracle(spark):
@@ -388,48 +315,38 @@ def test_short_doc_corpus_minhash_family_matches_oracle(spark):
         "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10",
         "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10",   # duplicate of the above
     ]
-    with tempfile.TemporaryDirectory() as d:
-        _write_corpus(texts, d)
-        for name in ("x2_minhash_neardup", "x74_neardup_eval"):
-            got = QUERIES[name](spark, d).toPandas()
-            con = duckdb.connect()
-            con.sql(
-                "CREATE VIEW documents AS SELECT * FROM "
-                f"'{os.path.join(d, 'documents.parquet')}'"
-            )
-            want = con.sql(ORACLES[name]).df()
-            _compare(got, want)
-            spark.catalog.clearCache()  # x2 persists its signatures
+    for name in ("x2_minhash_neardup", "x74_neardup_eval"):
+        _fuzz(spark, name, documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x81_budget_select(spark, texts):
-    _fuzz_one(spark, "x81_token_budget_select", texts)
+    _fuzz(spark, "x81_token_budget_select", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x83_budget_cutoff(spark, texts):
-    _fuzz_one(spark, "x83_budget_select_cutoff", texts)
+    _fuzz(spark, "x83_budget_select_cutoff", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x92_calibrated_quality(spark, texts):
-    _fuzz_one(spark, "x92_source_calibrated_quality", texts)
+    _fuzz(spark, "x92_source_calibrated_quality", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x93_mean_surprisal(spark, texts):
-    _fuzz_one(spark, "x93_mean_surprisal", texts)
+    _fuzz(spark, "x93_mean_surprisal", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x95_vocab_coverage(spark, texts):
-    _fuzz_one(spark, "x95_vocab_coverage", texts)
+    _fuzz(spark, "x95_vocab_coverage", documents=_documents(texts))
 
 
 @st.composite
@@ -458,7 +375,7 @@ def spread_events(draw):
 @_FUZZ_SETTINGS
 @given(rows=spread_events())
 def test_fuzz_x94_retention_cohorts(spark, rows):
-    _fuzz_events(spark, "x94_retention_cohorts", rows)
+    _fuzz(spark, "x94_retention_cohorts", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -467,32 +384,32 @@ def test_fuzz_x97_late_event_audit(spark, rows):
     # day-scale random offsets against sequential event_ids =
     # heavily out-of-order arrival: the late branch actually fires
     # (the fixture is ts-ordered and reads all-zero).
-    _fuzz_events(spark, "x97_late_event_audit", rows)
+    _fuzz(spark, "x97_late_event_audit", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x98_mixture_deficiency(spark, texts):
-    _fuzz_one(spark, "x98_mixture_deficiency", texts)
+    _fuzz(spark, "x98_mixture_deficiency", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x100_event_transitions(spark, rows):
     # duplicate timestamps stress the (ts, event_id) tiebreak
-    _fuzz_events(spark, "x100_event_transitions", rows)
+    _fuzz(spark, "x100_event_transitions", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x101_readability(spark, texts):
-    _fuzz_one(spark, "x101_readability", texts)
+    _fuzz(spark, "x101_readability", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x102_journey_surprisal(spark, rows):
-    _fuzz_events(spark, "x102_journey_surprisal", rows)
+    _fuzz(spark, "x102_journey_surprisal", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -500,27 +417,27 @@ def test_fuzz_x102_journey_surprisal(spark, rows):
 def test_fuzz_x104_value_mad(spark, rows):
     # tiny groups + duplicate values stress the interpolated median
     # and the MAD=0 degenerate branch
-    _fuzz_events(spark, "x104_value_mad", rows)
+    _fuzz(spark, "x104_value_mad", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x107_user_ewma(spark, rows):
     # duplicate timestamps stress the fold-order tiebreak
-    _fuzz_events(spark, "x107_user_ewma", rows)
+    _fuzz(spark, "x107_user_ewma", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x109_session_transitions(spark, rows):
-    _fuzz_events(spark, "x109_session_transitions", rows)
+    _fuzz(spark, "x109_session_transitions", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=spread_events())
 def test_fuzz_x110_interarrival(spark, rows):
     # day-scale gaps: non-trivial percentile inputs
-    _fuzz_events(spark, "x110_interarrival_percentiles", rows)
+    _fuzz(spark, "x110_interarrival_percentiles", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -528,14 +445,14 @@ def test_fuzz_x110_interarrival(spark, rows):
 def test_fuzz_x111_conversion_time(spark, rows):
     # tiny corpora: often zero signups or zero conversions — the
     # NULL-percentile and rate-degenerate branches
-    _fuzz_events(spark, "x111_conversion_time", rows)
+    _fuzz(spark, "x111_conversion_time", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x113_char_entropy(spark, texts):
     # unicode corpora probe split('')/string_split('') agreement
-    _fuzz_one(spark, "x113_char_entropy", texts)
+    _fuzz(spark, "x113_char_entropy", documents=_documents(texts))
 
 
 # ---------------------------------------------------------------------------
@@ -549,160 +466,152 @@ def test_fuzz_x113_char_entropy(spark, texts):
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x9_top_terms(spark, texts):
-    _fuzz_one(spark, "x9_top_terms", texts)
+    _fuzz(spark, "x9_top_terms", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x11_lang_id(spark, texts):
-    _fuzz_one(spark, "x11_lang_id", texts)
+    _fuzz(spark, "x11_lang_id", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x21_token_count_bpe(spark, texts):
-    _fuzz_one(spark, "x21_token_count_bpe", texts)
+    _fuzz(spark, "x21_token_count_bpe", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x22_tfidf_top_term(spark, texts):
-    _fuzz_one(spark, "x22_tfidf_top_term", texts)
+    _fuzz(spark, "x22_tfidf_top_term", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x23_hash_sample(spark, texts):
-    _fuzz_one(spark, "x23_hash_sample", texts)
+    _fuzz(spark, "x23_hash_sample", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x31_clean_corpus(spark, texts):
-    _fuzz_one(spark, "x31_clean_corpus", texts)
+    _fuzz(spark, "x31_clean_corpus", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x34_train_val_test_split(spark, texts):
-    _fuzz_one(spark, "x34_train_val_test_split", texts)
+    _fuzz(spark, "x34_train_val_test_split", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x39_repetition_ratio(spark, texts):
-    _fuzz_one(spark, "x39_repetition_ratio", texts)
+    _fuzz(spark, "x39_repetition_ratio", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x45_pii_redaction(spark, texts):
-    _fuzz_one(spark, "x45_pii_redaction", texts)
+    _fuzz(spark, "x45_pii_redaction", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x47_chunk_documents(spark, texts):
-    _fuzz_one(spark, "x47_chunk_documents", texts)
+    _fuzz(spark, "x47_chunk_documents", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x48_char_diversity(spark, texts):
-    _fuzz_one(spark, "x48_char_diversity_filter", texts)
+    _fuzz(spark, "x48_char_diversity_filter", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x50_length_outlier(spark, texts):
-    _fuzz_one(spark, "x50_length_outlier_filter", texts)
+    _fuzz(spark, "x50_length_outlier_filter", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x57_bigram_rarity(spark, texts):
-    _fuzz_one(spark, "x57_bigram_rarity", texts)
+    _fuzz(spark, "x57_bigram_rarity", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x61_gopher_rules(spark, texts):
-    _fuzz_one(spark, "x61_gopher_quality_rules", texts)
+    _fuzz(spark, "x61_gopher_quality_rules", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x64_paragraph_dedup(spark, texts):
-    _fuzz_one(spark, "x64_paragraph_dedup", texts)
+    _fuzz(spark, "x64_paragraph_dedup", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=corpus())
 def test_fuzz_x79_vocab_growth(spark, texts):
-    _fuzz_one(spark, "x79_vocab_growth", texts)
+    _fuzz(spark, "x79_vocab_growth", documents=_documents(texts))
 
 
 # ---------------------------------------------------------------------------
-# Events-op broad batch: windows, sessions, funnels, as-of joins, the
-# Pandas grouped-map twin (x28), and the forward-fill/running-sum
-# window surface — duplicate timestamps and single-event users probe
-# tiebreaks and empty frames.
+# Events-op broad batch: windows, sessions, funnels, as-of joins and
+# the forward-fill/running-sum window surface — duplicate timestamps
+# and single-event users probe tiebreaks and empty frames.
 # ---------------------------------------------------------------------------
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x14_session_window(spark, rows):
-    _fuzz_events(spark, "x14_session_window", rows)
+    _fuzz(spark, "x14_session_window", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x16_sliding_window(spark, rows):
-    _fuzz_events(spark, "x16_sliding_window", rows)
+    _fuzz(spark, "x16_sliding_window", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x17_session_stats(spark, rows):
-    _fuzz_events(spark, "x17_session_stats", rows)
+    _fuzz(spark, "x17_session_stats", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x26_salted_user_totals(spark, rows):
-    _fuzz_events(spark, "x26_salted_user_totals", rows)
-
-
-@_FUZZ_SETTINGS
-@given(rows=events())
-def test_fuzz_x28_pandas_trend_twin(spark, rows):
-    # the grouped-map Pandas path against the SQL oracle
-    _fuzz_events(spark, "x28_user_value_trend", rows)
+    _fuzz(spark, "x26_salted_user_totals", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_x52_funnel_stages(spark, rows):
-    _fuzz_events(spark, "x52_funnel_stages", rows)
+    _fuzz(spark, "x52_funnel_stages", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_j9_asof_last_purchase(spark, rows):
-    _fuzz_events(spark, "j9_asof_last_purchase", rows)
+    _fuzz(spark, "j9_asof_last_purchase", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_w2_running_sum(spark, rows):
-    _fuzz_events(spark, "w2_running_sum", rows)
+    _fuzz(spark, "w2_running_sum", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=events())
 def test_fuzz_w8_forward_fill(spark, rows):
-    _fuzz_events(spark, "w8_forward_fill", rows)
+    _fuzz(spark, "w8_forward_fill", events=_events(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -747,31 +656,31 @@ def json_events(draw):
 @_FUZZ_SETTINGS
 @given(rows=json_events())
 def test_fuzz_f2_json_extract(spark, rows):
-    _fuzz_events(spark, "f2_json_extract", rows)
+    _fuzz(spark, "f2_json_extract", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=json_events())
 def test_fuzz_f3_json_exists(spark, rows):
-    _fuzz_events(spark, "f3_json_exists", rows)
+    _fuzz(spark, "f3_json_exists", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=json_events())
 def test_fuzz_f4_json_text_like(spark, rows):
-    _fuzz_events(spark, "f4_json_text_like", rows)
+    _fuzz(spark, "f4_json_text_like", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=json_events())
 def test_fuzz_f5_json_array_membership(spark, rows):
-    _fuzz_events(spark, "f5_json_array_membership", rows)
+    _fuzz(spark, "f5_json_array_membership", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=json_events())
 def test_fuzz_x18_props_schema_on_read(spark, rows):
-    _fuzz_events(spark, "x18_props_schema_on_read", rows)
+    _fuzz(spark, "x18_props_schema_on_read", events=_events(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -784,31 +693,31 @@ def test_fuzz_x18_props_schema_on_read(spark, rows):
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x5_cosine_topk(spark, rows):
-    _fuzz_emb(spark, "x5_cosine_topk", rows)
+    _fuzz(spark, "x5_cosine_topk", embeddings=_embeddings(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x25_batch_ann_topk(spark, rows):
-    _fuzz_emb(spark, "x25_batch_ann_topk", rows)
+    _fuzz(spark, "x25_batch_ann_topk", embeddings=_embeddings(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x43_quantize_error(spark, rows):
-    _fuzz_emb(spark, "x43_quantize_error", rows)
+    _fuzz(spark, "x43_quantize_error", embeddings=_embeddings(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x105_embedding_drift(spark, rows):
-    _fuzz_emb(spark, "x105_embedding_drift", rows)
+    _fuzz(spark, "x105_embedding_drift", embeddings=_embeddings(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=embeddings())
 def test_fuzz_x112_norm_audit(spark, rows):
-    _fuzz_emb(spark, "x112_norm_audit", rows)
+    _fuzz(spark, "x112_norm_audit", embeddings=_embeddings(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -844,25 +753,25 @@ def null_events(draw):
 @_FUZZ_SETTINGS
 @given(rows=null_events())
 def test_fuzz_null_values_w8_forward_fill(spark, rows):
-    _fuzz_events(spark, "w8_forward_fill", rows)
+    _fuzz(spark, "w8_forward_fill", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=null_events())
 def test_fuzz_null_values_x104_mad(spark, rows):
-    _fuzz_events(spark, "x104_value_mad", rows)
+    _fuzz(spark, "x104_value_mad", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=null_events())
 def test_fuzz_null_values_x28b_slope(spark, rows):
-    _fuzz_events(spark, "x28b_user_value_trend_sql", rows)
+    _fuzz(spark, "x28b_user_value_trend_sql", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=null_events())
 def test_fuzz_null_values_x13_sessionize(spark, rows):
-    _fuzz_events(spark, "x13_sessionize", rows)
+    _fuzz(spark, "x13_sessionize", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -870,7 +779,7 @@ def test_fuzz_null_values_x13_sessionize(spark, rows):
 def test_fuzz_null_values_x107_ewma(spark, rows):
     # Spark collect_list DROPS nulls; DuckDB list() KEEPS them — if
     # the two sides disagree on null handling the fold diverges
-    _fuzz_events(spark, "x107_user_ewma", rows)
+    _fuzz(spark, "x107_user_ewma", events=_events(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -886,7 +795,7 @@ _EDGE_DATES = st.sampled_from(
         "1994-11-30", "1995-03-31", "1994-01-01", "1995-06-15",
         "1992-02-29", "1999-12-31",
     ]
-)
+).map(datetime.datetime.fromisoformat)
 
 
 @st.composite
@@ -907,72 +816,48 @@ def calendar_orders(draw):
     return rows
 
 
-def _fuzz_orders(spark, name: str, rows) -> None:
-    import datetime
-
-    with tempfile.TemporaryDirectory() as d:
-        tbl = pa.table(
-            {
-                "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-                "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-                "o_orderstatus": pa.array(
-                    [r[2] for r in rows], pa.string()
-                ),
-                "o_totalprice": pa.array(
-                    [r[3] for r in rows], pa.float64()
-                ),
-                "o_orderdate": pa.array(
-                    [
-                        datetime.datetime.fromisoformat(r[4])
-                        for r in rows
-                    ],
-                    pa.timestamp("us"),
-                ),
-                "o_orderpriority": pa.array(
-                    [r[5] for r in rows], pa.string()
-                ),
-            }
-        )
-        pq.write_table(tbl, os.path.join(d, "orders.parquet"))
-        got = QUERIES[name](spark, d).toPandas()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW orders AS SELECT * FROM "
-            f"'{os.path.join(d, 'orders.parquet')}'"
-        )
-        want = con.sql(ORACLES[name]).df()
-        _compare(got, want)
+def _orders(rows) -> pa.Table:
+    return pa.table(
+        {
+            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
+            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
+            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
+            "o_totalprice": pa.array([r[3] for r in rows], pa.float64()),
+            "o_orderdate": pa.array([r[4] for r in rows], pa.timestamp("us")),
+            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
+        }
+    )
 
 
 @_FUZZ_SETTINGS
 @given(rows=calendar_orders())
 def test_fuzz_d1_date_trunc(spark, rows):
-    _fuzz_orders(spark, "d1_date_trunc", rows)
+    _fuzz(spark, "d1_date_trunc", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=calendar_orders())
 def test_fuzz_d2_extract_parts(spark, rows):
-    _fuzz_orders(spark, "d2_extract_parts", rows)
+    _fuzz(spark, "d2_extract_parts", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=calendar_orders())
 def test_fuzz_d3_date_arith(spark, rows):
-    _fuzz_orders(spark, "d3_date_arith", rows)
+    _fuzz(spark, "d3_date_arith", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=calendar_orders())
 def test_fuzz_d4_format_epoch(spark, rows):
-    _fuzz_orders(spark, "d4_format_epoch", rows)
+    _fuzz(spark, "d4_format_epoch", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=calendar_orders())
 def test_fuzz_d5_month_arith(spark, rows):
     # Jan 31 + 3mo, Feb 29 + 3mo, Nov 30 + 3mo: clamping semantics
-    _fuzz_orders(spark, "d5_month_arith", rows)
+    _fuzz(spark, "d5_month_arith", orders=_orders(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -1011,58 +896,31 @@ def layout_orders(draw):
     return rows
 
 
-def _write_layout_orders(rows, d: str) -> None:
-    tbl = pa.table(
-        {
-            "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
-            "o_custkey": pa.array([r[1] for r in rows], pa.int64()),
-            "o_orderstatus": pa.array([r[2] for r in rows], pa.string()),
-            "o_totalprice": pa.array([r[3] for r in rows], pa.float64()),
-            "o_orderdate": pa.array([r[4] for r in rows], pa.timestamp("us")),
-            "o_orderpriority": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(d, "orders.parquet"))
-
-
-def _fuzz_layout_orders(spark, name: str, rows) -> None:
-    with tempfile.TemporaryDirectory() as d:
-        _write_layout_orders(rows, d)
-        got = QUERIES[name](spark, d).toPandas()
-        con = duckdb.connect()
-        con.sql(
-            "CREATE VIEW orders AS SELECT * FROM "
-            f"'{os.path.join(d, 'orders.parquet')}'"
-        )
-        want = con.sql(ORACLES[name]).df()
-        _compare(got, want)
-
-
 @_FUZZ_SETTINGS
 @given(rows=layout_orders())
 def test_fuzz_x115_snapshot_cdc(spark, rows):
     # keys hitting %97/%11 residues and dates straddling both cutoffs
     # exercise all four change kinds
-    _fuzz_layout_orders(spark, "x115_snapshot_cdc_diff", rows)
+    _fuzz(spark, "x115_snapshot_cdc_diff", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=layout_orders())
 def test_fuzz_x119_zone_map_pruning(spark, rows):
-    _fuzz_layout_orders(spark, "x119_zone_map_pruning", rows)
+    _fuzz(spark, "x119_zone_map_pruning", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=layout_orders())
 def test_fuzz_x120_partial_agg_merge(spark, rows):
-    _fuzz_layout_orders(spark, "x120_partial_agg_merge", rows)
+    _fuzz(spark, "x120_partial_agg_merge", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=layout_orders())
 def test_fuzz_x122_compaction_plan(spark, rows):
     # single-file months and months far over the target both occur
-    _fuzz_layout_orders(spark, "x122_compaction_plan", rows)
+    _fuzz(spark, "x122_compaction_plan", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
@@ -1070,7 +928,7 @@ def test_fuzz_x122_compaction_plan(spark, rows):
 def test_fuzz_x121_scd2_history(spark, rows):
     # the generator forces duplicate timestamps: the (ts, event_id) tie
     # break is exactly what this pins across engines
-    _fuzz_events(spark, "x121_scd2_history", rows)
+    _fuzz(spark, "x121_scd2_history", events=_events(rows))
 
 
 @_FUZZ_SETTINGS
@@ -1078,13 +936,13 @@ def test_fuzz_x121_scd2_history(spark, rows):
 def test_fuzz_x123_weighted_sample(spark, texts):
     # empty docs (n_chars=0) are filtered on both sides; priorities are
     # integer so the top-k tie-break (priority, doc_id) is total
-    _fuzz_one(spark, "x123_weighted_sample", texts)
+    _fuzz(spark, "x123_weighted_sample", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(rows=layout_orders())
 def test_fuzz_x124_affected_partitions(spark, rows):
-    _fuzz_layout_orders(spark, "x124_affected_partitions", rows)
+    _fuzz(spark, "x124_affected_partitions", orders=_orders(rows))
 
 
 # --- retrieval/audit family (r6): phrase words planted in the pool so
@@ -1108,19 +966,19 @@ def phrase_corpus(draw):
 @_FUZZ_SETTINGS
 @given(texts=phrase_corpus())
 def test_fuzz_x125_phrase_match(spark, texts):
-    _fuzz_one(spark, "x125_phrase_match", texts)
+    _fuzz(spark, "x125_phrase_match", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=phrase_corpus())
 def test_fuzz_x129_phrase_postings(spark, texts):
-    _fuzz_one(spark, "x129_phrase_postings", texts)
+    _fuzz(spark, "x129_phrase_postings", documents=_documents(texts))
 
 
 @_FUZZ_SETTINGS
 @given(texts=phrase_corpus())
 def test_fuzz_x131_collocations(spark, texts):
-    _fuzz_one(spark, "x131_collocations", texts)
+    _fuzz(spark, "x131_collocations", documents=_documents(texts))
 
 
 # --- audit-family fuzz over orders (x126 FD audit, x130 Benford):
@@ -1152,13 +1010,13 @@ def audit_orders(draw):
 @_FUZZ_SETTINGS
 @given(rows=audit_orders())
 def test_fuzz_x126_fd_audit(spark, rows):
-    _fuzz_orders(spark, "x126_fd_audit", rows)
+    _fuzz(spark, "x126_fd_audit", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
 @given(rows=audit_orders())
 def test_fuzz_x130_benford_audit(spark, rows):
-    _fuzz_orders(spark, "x130_benford_audit", rows)
+    _fuzz(spark, "x130_benford_audit", orders=_orders(rows))
 
 
 @_FUZZ_SETTINGS
@@ -1167,4 +1025,4 @@ def test_fuzz_x132_ks_drift(spark, texts):
     # the shared corpus writer emits a SINGLE source ('srcF') — the
     # degenerate n_rest = 0 case that must NULL the ppm on both
     # engines instead of dividing by zero
-    _fuzz_one(spark, "x132_ks_drift", texts)
+    _fuzz(spark, "x132_ks_drift", documents=_documents(texts))

@@ -11,10 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ask_duckdb_spark.operators import QUERIES
+from ask_duckdb_spark.operators import ORACLES, QUERIES
 from ask_duckdb_spark.operators.dedup import W_SPAN
 from ask_duckdb_spark.operators.hygiene import EVAL_MOD
-from ask_duckdb_spark.sources.catalog import load_table
+from ask_duckdb_spark.sources.catalog import duckdb_conn, load_table
 from tests.conftest import SF_DIR_001
 
 
@@ -96,8 +96,6 @@ def test_x134_nonspace_strip_is_engine_portable_on_vertical_tab(spark, tmp_path)
     (n_words/n_bpe_tokens still ride the shared ``\\s`` tokenizer, whose
     dialect split on \\x0B is a known, documented residual — this test
     deliberately asserts only the column ADVICE r7 fixed.)"""
-    import duckdb
-
     sf = str(tmp_path)
     spark.createDataFrame(
         [(0, "abc\x0bdef ghi", "en", "s1", 12)],
@@ -107,12 +105,7 @@ def test_x134_nonspace_strip_is_engine_portable_on_vertical_tab(spark, tmp_path)
     got = QUERIES["x134_tokenizer_fertility"](spark, sf).collect()[0]
     assert got["n_chars"] == 9  # \x0B and the space both stripped
 
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
-    )
-    from ask_duckdb_spark.operators import ORACLES
-
+    con = duckdb_conn(sf)
     orow = con.sql(ORACLES["x134_tokenizer_fertility"]).df().iloc[0]
     con.close()
     assert int(orow.n_chars) == 9 == got["n_chars"]

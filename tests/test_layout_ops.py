@@ -359,23 +359,11 @@ def test_x124_scopes_recompute_correctly(spark):
     assert all(ra.get(m) == rb.get(m) for m in unflagged)
 
 
-def test_x117b_plain_twin_row_equal_and_broadcast_semi(spark):
+def test_x117b_plain_twin_broadcast_semi(spark):
     """x117b (VERDICT r8 item 4): the registered plain-semi twin must
-    be row-identical to the bloom form (same oracle pins both at the
-    driver) and must execute as a BROADCAST left-semi at fixture scale
-    — the honest local winner's plan, not a shuffled merge join."""
-    bloom = {
-        r["l_returnflag"]: r
-        for r in QUERIES["x117_bloom_semijoin"](spark, SF_DIR).collect()
-    }
-    plain = {
-        r["l_returnflag"]: r
-        for r in QUERIES["x117b_plain_semijoin"](spark, SF_DIR).collect()
-    }
-    assert set(bloom) == set(plain)
-    for k in bloom:
-        assert bloom[k]["n_items"] == plain[k]["n_items"]
-        assert bloom[k]["revenue"] == plain[k]["revenue"]
+    execute as a BROADCAST left-semi at fixture scale — the honest
+    local winner's plan, not a shuffled merge join. (Its rows match the
+    bloom form's through the shared oracle, tests/test_oracle_parity.py.)"""
     from ask_duckdb_spark.plans import formatted_plan
 
     plan = formatted_plan(QUERIES["x117b_plain_semijoin"](spark, SF_DIR))

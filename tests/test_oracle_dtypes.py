@@ -14,11 +14,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from ask_duckdb_spark.operators import ORACLES
-from ask_duckdb_spark.sources.catalog import TABLES
+from ask_duckdb_spark.sources.catalog import duckdb_conn
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_SF", "/root/testdata/sf0.001")
 
@@ -27,11 +26,7 @@ _BANNED = {"HUGEINT", "UHUGEINT"}
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        c.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return c
+    return duckdb_conn(SF_DIR)
 
 
 def test_no_oracle_materializes_hugeint(con):

@@ -313,21 +313,6 @@ def test_x82_card_covers_corpus(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_x83_equals_x81_exact_window(spark):
-    """The distributed cutoff construction must reproduce the global
-    window's selection row-for-row, cum_tokens included."""
-    exact = sorted(
-        map(tuple, QUERIES["x81_token_budget_select"](spark, SF_DIR).collect())
-    )
-    cutoff = sorted(
-        map(
-            tuple,
-            QUERIES["x83_budget_select_cutoff"](spark, SF_DIR).collect(),
-        )
-    )
-    assert cutoff == exact
-
-
 # ---------------------------------------------------------------------------
 # x84 — truncation recall
 # ---------------------------------------------------------------------------
