@@ -9,13 +9,23 @@ Catalyst plays DuckDB's role. Two entry paths:
   *existing* session (the driver harness owns its own session); it is
   idempotent and safe to call per-query.
 
-Start-up is the largest wait a one-shot run sees, and it is
-single-threaded class initialization. :func:`get_spark` trims it two
-ways. It skips MLlib's classpath session extension
-(``org.apache.spark.sql.ml.InternalFunctionRegistration``, see
-:data:`BUILDER_CONF`). When it has to launch the JVM, it initializes the
-SQL layer's classes (:data:`PRELOAD_CLASSES`) on one background JVM
-thread while the SparkContext starts on the caller's.
+Start-up is the largest wait a one-shot run sees, and most of it is
+JVM class loading: about 19k classes over set-up and the first query.
+:func:`get_spark` trims it three ways:
+
+- When it has to launch the JVM, it launches it through
+  :func:`cds.launch`, which maps a cached class-data-sharing archive of
+  the classes a session loads (recorded once per JDK and Spark install,
+  at the exit of the first run without one), so most classes are mapped
+  rather than read and parsed from Spark's jars.
+- It skips MLlib's classpath session extension
+  (``org.apache.spark.sql.ml.InternalFunctionRegistration``, see
+  :data:`BUILDER_CONF`).
+- On a fresh JVM, it initializes the SQL layer's classes
+  (:data:`PRELOAD_CLASSES`) on one background JVM thread while the
+  SparkContext starts on the caller's.
+
+None of these changes a session's SQL confs, plans or results.
 """
 
 from __future__ import annotations
@@ -25,8 +35,10 @@ import threading
 import warnings
 
 from py4j.protocol import Py4JError
-from pyspark import SparkConf, SparkContext
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import cds
 
 #: Confs that are runtime-settable on any session and required for
 #: correctness against the DuckDB oracle.
@@ -72,10 +84,35 @@ RUNTIME_CONF: dict[str, str] = {
     # spill-safe default for genuinely huge joins at 100 TB.
 }
 
+
+def default_driver_memory() -> str:
+    """Half the memory this process may use, capped at 16g: the host's
+    MemTotal, or its cgroup's memory limit when that is lower. A heap
+    larger than the host turns one memory-hungry run into an OOM-killed
+    JVM, and every later Py4J call of the run into an unrelated failure.
+    16g where none of them can be read."""
+    limits = []
+    for path, prefix in (("/proc/meminfo", "MemTotal:"),
+                         ("/sys/fs/cgroup/memory.max", ""),  # cgroup v2
+                         ("/sys/fs/cgroup/memory/memory.limit_in_bytes", "")):  # v1
+        try:
+            with open(path) as f:
+                words = next(ln for ln in f if ln.startswith(prefix)).split()
+        except (OSError, StopIteration):
+            continue
+        if prefix:  # "MemTotal: N kB"
+            limits.append(int(words[1]) << 10)
+        elif words[0].isdigit():  # "max" is no limit
+            limits.append(int(words[0]))
+    if not limits:
+        return "16g"
+    return f"{min(min(limits) // 2, 16 << 30) >> 20}m"
+
+
 #: Build-time confs (need a fresh session).
 BUILDER_CONF: dict[str, str] = {
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
     # Arrow batch size for pandas UDF stages: large enough to amortize
     # transfer, small enough to bound per-batch memory at scale.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
@@ -155,6 +192,24 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def session_conf(
+    app_name: str = "ask_duckdb_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf :func:`get_spark` launches and builds its session with."""
+    cpus = default_parallelism()
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    conf: dict[str, str] = {"spark.master": master, "spark.app.name": app_name}
+    conf.update(BUILDER_CONF)
+    conf.update(RUNTIME_CONF)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "ask_duckdb_spark",
     master: str | None = None,
@@ -169,21 +224,14 @@ def get_spark(
     initial value). Everything else is runtime conf shared with
     :func:`apply_runtime_conf`.
 
-    When no JVM is running yet, this launches it first, with the same
-    conf ``getOrCreate`` gets (so ``-Xmx`` and extraJavaOptions reach
-    it), and starts the class preload before the SparkContext; nothing
-    joins that daemon thread.
+    When no JVM is running yet, this launches it first through
+    :func:`cds.launch`, with the same conf ``getOrCreate`` gets (so
+    ``-Xmx`` and extraJavaOptions reach it), and starts the class
+    preload before the SparkContext; nothing joins that daemon thread.
     """
-    cpus = default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    conf: dict[str, str] = {"spark.master": master, "spark.app.name": app_name}
-    conf.update(BUILDER_CONF)
-    conf.update(RUNTIME_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = session_conf(app_name, master, shuffle_partitions, extra_conf)
     if SparkContext._gateway is None:
-        SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+        cds.launch(conf)
         threading.Thread(target=_preload_classes, args=(SparkContext._jvm,),
                          name="spark-class-preload", daemon=True).start()
     spark = SparkSession.builder.config(map=conf).getOrCreate()

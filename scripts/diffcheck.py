@@ -2,19 +2,18 @@
 
 Runs each registered query on Spark and its DuckDB oracle twin on the
 same parquet fixtures, then compares row-count + (sorted) schema +
-values (rows sorted). Float columns are compared BIT-EXACT by default
-(uint64 view of the float64 payload, so +0.0 vs -0.0 and last-ulp
+values (rows sorted). Float columns are compared BIT-EXACT, the only
+mode (uint64 view of the float64 payload, so +0.0 vs -0.0 and last-ulp
 divergences FAIL, exactly like the driver's exact value hash — the r5
 x28b lesson: a tolerance compare here passed three rounds of queries the
-driver hashed red). ``--tol`` restores the old 1e-9 tolerance compare
-for exploratory use only; evidence claims must come from the default.
+driver hashed red).
 
 ``check`` is the per-entry check and ``compare`` the repo's one
 Spark-vs-DuckDB comparator: tier-1 runs ``check`` over the whole
 registry (tests/test_oracle_parity.py) and the fuzz suite over
 generated fixtures (tests/test_fuzz_differential.py).
 
-Usage: python scripts/diffcheck.py [--sf /root/testdata/sf0.01] [--tol] [names...]
+Usage: python scripts/diffcheck.py [--sf SF_DIR] [names...]   (SF_DIR defaults to the sf0.01 fixtures)
 """
 
 from __future__ import annotations
@@ -45,9 +44,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
 
 
-def compare(
-    spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, exact: bool = True
-) -> list[str]:
+def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
     problems: list[str] = []
     if len(spark_pdf) != len(duck_pdf):
         problems.append(f"rowcount spark={len(spark_pdf)} duck={len(duck_pdf)}")
@@ -74,19 +71,15 @@ def compare(
                 continue
             av = pd.to_numeric(av, errors="coerce").astype(float)
             bv = pd.to_numeric(bv, errors="coerce").astype(float)
-            both_nan = av.isna() & bv.isna()
-            if exact:
-                # Bit-exact: the driver hashes values exactly, so -0.0
-                # vs +0.0 and 1-ulp drift must FAIL here too. NaN==NaN
-                # is allowed regardless of payload bits (both sides
-                # surface NULL/NaN as quiet NaN through pandas).
-                ab = av.to_numpy(dtype=np.float64).view(np.uint64)
-                bb = bv.to_numpy(dtype=np.float64).view(np.uint64)
-                close = (ab == bb) | both_nan.to_numpy()
-            else:
-                close = np.isclose(av, bv, rtol=1e-9, atol=1e-9) | both_nan
+            # Bit-exact: the driver hashes values exactly, so -0.0 vs
+            # +0.0 and 1-ulp drift must FAIL here too. NaN==NaN is
+            # allowed regardless of payload bits (both sides surface
+            # NULL/NaN as quiet NaN through pandas).
+            ab = av.to_numpy(dtype=np.float64).view(np.uint64)
+            bb = bv.to_numpy(dtype=np.float64).view(np.uint64)
+            close = (ab == bb) | (av.isna() & bv.isna()).to_numpy()
             if not close.all():
-                i = int(np.argmin(np.asarray(close)))
+                i = int(np.argmin(close))
                 problems.append(f"col {c}: row {i} spark={av[i]!r} duck={bv[i]!r}")
         else:
             eq = (av == bv) | (av.isna() & bv.isna())
@@ -96,9 +89,7 @@ def compare(
     return problems
 
 
-def check(
-    spark, con, name: str, sf_dir: str, exact: bool = True
-) -> tuple[str, list[str], int]:
+def check(spark, con, name: str, sf_dir: str) -> tuple[str, list[str], int]:
     """Run one registry entry on Spark, then its DuckDB oracle on
     ``con`` (views over the same ``sf_dir``), and compare.
 
@@ -123,7 +114,7 @@ def check(
         ddf = con.sql(ORACLES[name]).df()
     except Exception as e:
         return "FAIL", [f"oracle raised {type(e).__name__}: {e}"], len(sdf)
-    problems = compare(sdf, ddf, exact=exact)
+    problems = compare(sdf, ddf)
     if problems:
         return "FAIL", problems, len(sdf)
     return ("PASS" if len(sdf) else "VACUOUS"), [], len(sdf)
@@ -132,11 +123,6 @@ def check(
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument(
-        "--tol",
-        action="store_true",
-        help="tolerance float compare (1e-9) instead of the default bit-exact",
-    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -158,9 +144,7 @@ def main() -> int:
     n_pass = n_fail = n_rows_only = 0
     for name in names:
         t0 = time.time()
-        status, problems, n_rows = check(
-            spark, con, name, args.sf, exact=not args.tol
-        )
+        status, problems, n_rows = check(spark, con, name, args.sf)
         dt = time.time() - t0
         if status == "FAIL":
             print(f"FAIL {name}: {problems[:3]}")

@@ -1,6 +1,7 @@
-"""Shared fixtures: one tuned SparkSession per test run (a fresh one
-takes ~6 s to start on a 4-core host — reuse it), the smallest fixture
-dir, and the queuedata table."""
+"""Shared fixtures: one tuned SparkSession per test run (on a 4-core
+host a fresh one takes ~5-6 s to start, ~2.5-3 s on a cached
+class-data-sharing archive — reuse it), the smallest fixture dir, and
+the queuedata table."""
 
 from __future__ import annotations
 

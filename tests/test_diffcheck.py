@@ -12,6 +12,8 @@ columns still compare bit-exact.
 
 from __future__ import annotations
 
+import inspect
+
 import duckdb
 import pandas as pd
 
@@ -63,3 +65,9 @@ def test_int_int_unaffected():
     a = pd.DataFrame({"v": pd.array([5, 7], dtype="int64")})
     b = pd.DataFrame({"v": pd.array([5, 7], dtype="int64")})
     assert diffcheck.compare(a, b) == []
+
+
+def test_bit_exact_is_the_only_mode():
+    """No tolerance path is left through the registry comparator."""
+    assert list(inspect.signature(diffcheck.compare).parameters) == ["spark_pdf", "duck_pdf"]
+    assert "exact" not in inspect.signature(diffcheck.check).parameters
