@@ -17,7 +17,8 @@ JDK 17 can dump the classes one run loaded into a dynamic archive
   JVM's CDS logging off, so a damaged or mismatched archive is skipped
   without a word. ``SPARK_CONF_DIR`` points at an empty directory for
   the launch: Spark puts its conf dir on the classpath, and JDK 17 maps
-  no archive when a non-empty directory is on it.
+  no archive when a non-empty directory is on it. The launch first
+  deletes the dump and work dir of any trainer whose pid is dead.
 - Otherwise the launch is the plain one, and the process records the
   archive once, at exit (:func:`_record`): under an ``O_EXCL`` lock file
   it runs a trainer subprocess (``python -m ask_duckdb_spark.cds``) that
@@ -174,9 +175,16 @@ def start(conf: dict[str, str], java_option: str | None = None,
 
 def launch(conf: dict[str, str]) -> None:
     """Launch the driver JVM on the archive when there is one for this
-    key; otherwise launch it plainly and record the archive at exit."""
+    key, after deleting what dead trainers left beside it (a trainer
+    killed with its run never cleans up, and no later run trains once
+    the archive is published); otherwise launch it plainly and record
+    the archive at exit."""
     plan = _plan(conf)
     if plan is not None and is_archive(plan.archive):
+        try:
+            _prune_leftovers(plan.cache)
+        except OSError:
+            pass
         start(conf, f"-XX:SharedArchiveFile={plan.archive}", plan.conf_dir)
         return
     start(conf)
@@ -247,17 +255,31 @@ def take_lock(path: str) -> bool:
     return False
 
 
+def _prune_leftovers(cache: str) -> None:
+    """Delete the ``dump-<pid>`` and ``train-<pid>`` that trainers whose
+    pid is dead left in ``cache``. Runs on archive launches too, where
+    another process may be pruning the same files: those races are
+    ignored."""
+    for name in os.listdir(cache):
+        stem, _, pid = name.partition("-")
+        if stem not in ("dump", "train") or not pid.isdigit() or _pid_alive(int(pid)):
+            continue
+        path = os.path.join(cache, name)
+        if stem == "train":
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            try:
+                os.unlink(path)
+            except FileNotFoundError:
+                pass
+
+
 def _prune(plan: Plan) -> None:
     """Delete archives of other keys and what dead trainers left."""
     for name in os.listdir(plan.cache):
-        stem, _, pid = name.partition("-")
-        path = os.path.join(plan.cache, name)
         if name.endswith(".jsa") and name != os.path.basename(plan.archive):
-            os.unlink(path)
-        elif stem == "dump" and pid.isdigit() and not _pid_alive(int(pid)):
-            os.unlink(path)
-        elif stem == "train" and pid.isdigit() and not _pid_alive(int(pid)):
-            shutil.rmtree(path, ignore_errors=True)
+            os.unlink(os.path.join(plan.cache, name))
+    _prune_leftovers(plan.cache)
 
 
 def _record(plan: Plan, owner: int) -> None:

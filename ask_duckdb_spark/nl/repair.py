@@ -23,8 +23,11 @@ distinct candidate: the DuckDB→Spark dialect shim, then the repairs.
 
 from __future__ import annotations
 
+import contextlib
 import difflib
+import logging
 import re
+import threading
 from typing import Any
 
 __all__ = [
@@ -310,6 +313,45 @@ def ensure_readonly(sql: str) -> None:
         )
 
 
+#: PySpark's loggers that write a JSON record of every failed analysis
+#: to stderr (``PySparkException._log_exception``); formatting it prints
+#: the JVM stack trace a second time, over Py4J.
+QUERY_CONTEXT_LOGGERS = ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+_quiet_lock = threading.Lock()
+_quiet: dict[str, Any] = {"depth": 0, "levels": [], "loggers": None}
+
+
+@contextlib.contextmanager
+def _quiet_query_context_loggers():
+    """Set :data:`QUERY_CONTEXT_LOGGERS` above ERROR for the block, and
+    restore their levels when the last of any overlapping blocks ends.
+
+    The levels are process-wide: while any block is open, a failed
+    analysis on any thread writes no query-context record. The loggers
+    are fetched once, on first use (``PySparkLogger.getLogger`` swaps
+    the global logger class while it runs)."""
+    with _quiet_lock:
+        if _quiet["loggers"] is None:
+            from pyspark.logger import PySparkLogger
+
+            _quiet["loggers"] = [PySparkLogger.getLogger(name)
+                                 for name in QUERY_CONTEXT_LOGGERS]
+        loggers = _quiet["loggers"]
+        if _quiet["depth"] == 0:
+            _quiet["levels"] = [lg.level for lg in loggers]
+            for lg in loggers:
+                lg.setLevel(logging.CRITICAL + 1)
+        _quiet["depth"] += 1
+    try:
+        yield
+    finally:
+        with _quiet_lock:
+            _quiet["depth"] -= 1
+            if _quiet["depth"] == 0:
+                for lg, level in zip(loggers, _quiet["levels"]):
+                    lg.setLevel(level)
+
+
 def execute_with_repair(
     spark,
     sql: str,
@@ -325,11 +367,16 @@ def execute_with_repair(
     reference's engine); the regex repairs of that translation
     (aliases, literal case, identifier typos). Each is built only when
     the one before it failed, and each DISTINCT candidate is gated and
-    analyzed at most once: a failed Catalyst analysis costs ~20x a good
-    one, so an unchanged statement is never re-run. The read-only gate
-    raises at once; when every candidate fails analysis, the last error
-    is re-raised. An error raised here carries the statement it was
-    raised for as ``.sql``.
+    analyzed at most once: on a warm 4-core host a failed analysis costs
+    about 75 ms through ``spark.sql`` against about 12 ms for a good one
+    (PySpark's conversion of the Py4J error fetches the JVM stack
+    trace), so an unchanged statement is never re-run. While the
+    candidates run, PySpark's query-context loggers are quiet, process-
+    wide (:data:`QUERY_CONTEXT_LOGGERS`): their record of each failure would
+    print the stack trace a second time, about 50 ms more. The
+    read-only gate raises at once; when every candidate fails analysis,
+    the last error is re-raised. An error raised here carries the
+    statement it was raised for as ``.sql``.
     """
     from pyspark.errors import AnalysisException, ParseException
 
@@ -342,16 +389,17 @@ def execute_with_repair(
         yield repair_sql(shimmed, actual_cols, meta=meta, synonym_map=synonym_map)
 
     tried: list[str] = []
-    for candidate in candidates():
-        if candidate in tried:
-            continue
-        tried.append(candidate)
-        try:
-            ensure_readonly(candidate)
-            return spark.sql(candidate), candidate, candidate != sql
-        except (AnalysisException, ParseException) as e:
-            e.sql, error = candidate, e
-        except Exception as e:  # the read-only gate, or an engine fault
-            e.sql = candidate
-            raise
+    with _quiet_query_context_loggers():
+        for candidate in candidates():
+            if candidate in tried:
+                continue
+            tried.append(candidate)
+            try:
+                ensure_readonly(candidate)
+                return spark.sql(candidate), candidate, candidate != sql
+            except (AnalysisException, ParseException) as e:
+                e.sql, error = candidate, e
+            except Exception as e:  # the read-only gate, or an engine fault
+                e.sql = candidate
+                raise
     raise error

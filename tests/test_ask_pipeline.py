@@ -5,12 +5,15 @@ queuedata fixture."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ask_duckdb_spark.nl.ask import answer_question
 from ask_duckdb_spark.nl.llm import StubLLM
-from ask_duckdb_spark.nl.repair import execute_with_repair
+from ask_duckdb_spark.nl.repair import QUERY_CONTEXT_LOGGERS, execute_with_repair
 
 
 def _provider():
@@ -247,3 +250,54 @@ def test_unrepairable_sql_analyzed_once_per_candidate(
         execute_with_repair(spark, sql, set(df.columns), meta=meta)
     assert len(seen) == len(set(seen)) == distinct
     assert err.value.sql == seen[-1]
+
+
+class _Records(logging.Handler):
+    def __init__(self):
+        super().__init__()
+        self.records: list[logging.LogRecord] = []
+
+    def emit(self, record):
+        self.records.append(record)
+
+
+@pytest.fixture
+def query_context_records():
+    """Records PySpark's query-context loggers hand to their handlers."""
+    from pyspark.logger import PySparkLogger
+
+    handler = _Records()
+    loggers = [PySparkLogger.getLogger(n) for n in QUERY_CONTEXT_LOGGERS]
+    levels = [lg.level for lg in loggers]
+    for lg in loggers:
+        lg.addHandler(handler)
+    yield handler.records
+    for lg in loggers:
+        lg.removeHandler(handler)
+    assert [lg.level for lg in loggers] == levels  # restored
+
+
+def test_repair_candidates_write_no_query_context_log(spark, queuedata,
+                                                     query_context_records):
+    """A typo'd typed SQL that the repairs fix fails analysis once on the
+    way, and PySpark's query-context loggers write nothing for it; the
+    same failure outside ``execute_with_repair`` is logged."""
+    df, _ = queuedata
+    typo = "SELECT queue, corecountt FROM queuedata"
+    out, final_sql, repaired = execute_with_repair(spark, typo, set(df.columns))
+    assert repaired and final_sql == "SELECT queue, corecount FROM queuedata"
+    assert out.count() > 0
+    assert query_context_records == []
+    with pytest.raises(AnalysisException):
+        spark.sql(typo)
+    assert [r.name for r in query_context_records] == ["SQLQueryContextLogger"]
+
+
+def test_unrepairable_sql_still_raises_with_its_statement(spark, queuedata,
+                                                        query_context_records):
+    df, _ = queuedata
+    with pytest.raises(AnalysisException) as caught:
+        execute_with_repair(spark, "SELECT no_such_column_at_all FROM queuedata",
+                            set(df.columns))
+    assert caught.value.sql == "SELECT no_such_column_at_all FROM queuedata"
+    assert query_context_records == []

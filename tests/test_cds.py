@@ -231,3 +231,24 @@ def test_cli_on_a_garbage_archive_still_answers(tmp_path, monkeypatch):
     assert proc.stdout.startswith(RESULT) and len(lines) == 3, proc.stdout
     assert lines[1].split() == ["n"] and lines[2].strip().isdigit()
     _assert_none_left(tmp_path, jvm)
+
+
+def test_archive_launch_deletes_dead_trainers_leftovers(launches):
+    """A trainer killed with its run leaves ``dump-<pid>`` and
+    ``train-<pid>``; the next launch on the archive deletes them, and
+    keeps a live trainer's and other keys' archives."""
+    plan = cds._plan(session_conf("t"))
+    with open(plan.archive, "wb") as f:
+        f.write(cds.MAGIC + b"\0" * 64)
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    live = os.getpid()
+    for pid in (dead.pid, live):
+        _touch(os.path.join(plan.cache, f"dump-{pid}"))
+        os.mkdir(os.path.join(plan.cache, f"train-{pid}"))
+    _touch(os.path.join(plan.cache, "other.jsa"))
+    cds.launch(session_conf("t"))
+    assert launches["start"][-1][1] == f"-XX:SharedArchiveFile={plan.archive}"
+    assert sorted(os.listdir(plan.cache)) == sorted(
+        ["conf", os.path.basename(plan.archive), "other.jsa", f"dump-{live}",
+         f"train-{live}"])
