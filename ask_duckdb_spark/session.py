@@ -33,6 +33,25 @@ wait for the caller's:
   The thread runs no Spark job.
 
 None of these changes a session's SQL confs, plans or results.
+
+One runtime conf is pinned for start-up's sake, not the oracle's:
+``spark.sql.icu.caseMappings.enabled=false`` (see :data:`RUNTIME_CONF`).
+Spark 4 case-maps UTF8_BINARY strings with ICU by default, and the
+first LOWER, UPPER or INITCAP in a JVM then initializes
+``CollationAwareUTF8String``, whose static initializer builds a
+title-case table for every Unicode code point (1.3-1.9 s of one
+thread's CPU and about 150 MB of heap, on a 4-core host) that no query
+reads. With the conf off, generated code calls
+``CollationSupport.Lower/Upper.execBinary`` (the JVM's
+``String.toLowerCase/toUpperCase``, Spark 3.5's path) instead of
+``execBinaryICU``, and the table is never built. ``lower`` and
+``upper`` return the same strings either way on the non-ASCII sample
+``tests/test_session.py`` pins; ``initcap`` differs on some non-ASCII
+strings, because the JVM applies simple title-case mappings and ICU
+full ones: ``initcap`` of U+FB01 (the ``fi`` ligature) then ``le``
+keeps the ligature, where ICU gives ``File``. Under a tr, az or lt JVM
+default locale, the JVM case-maps non-ASCII strings by that locale's
+rules. Every fixture table is ASCII.
 """
 
 from __future__ import annotations
@@ -49,7 +68,8 @@ from pyspark.sql import SparkSession
 from . import cds
 
 #: Confs that are runtime-settable on any session and required for
-#: correctness against the DuckDB oracle.
+#: correctness against the DuckDB oracle, plus the ICU case-mapping
+#: switch, which saves the first case-mapping query's start-up.
 RUNTIME_CONF: dict[str, str] = {
     # DuckDB timestamps are timezone-naive; pin UTC so TimestampType
     # round-trips match (see pyspark guide "Pitfalls").
@@ -90,6 +110,17 @@ RUNTIME_CONF: dict[str, str] = {
     # favored SHJ; an earlier apparent 14-42% SHJ win was a
     # page-cache/warmup artifact (BENCHLOG r6). SMJ also remains the
     # spill-safe default for genuinely huge joins at 100 TB.
+
+    # Case-map UTF8_BINARY strings with the JVM (Spark 3.5's path), not
+    # ICU, whose first use in a JVM builds a title-case table of all
+    # 1,114,112 code points (CollationAwareUTF8String's static
+    # initializer, one word BreakIterator per code point): 1.3-1.9 s of
+    # CPU and ~150 MB of heap in the first lower/upper/initcap, for a
+    # table no query reads. lower/upper agree on the non-ASCII sample
+    # tests/test_session.py pins; initcap differs there (simple vs full
+    # title-case mappings), and a tr/az/lt JVM default locale case-maps
+    # non-ASCII strings by that locale (see the module docstring).
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 

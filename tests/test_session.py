@@ -1,10 +1,11 @@
 """Session start-up: runtime conf pinning on an existing session
-(session.apply_runtime_conf), the skipped MLlib extension, the class
-preload list and Janino warm-up, the threads a fresh launch starts, and
-a one-shot CLI run on a fresh JVM."""
+(session.apply_runtime_conf), the JVM case mapping it pins, the skipped
+MLlib extension, the class preload list and Janino warm-up, the threads
+a fresh launch starts, and a one-shot CLI run on a fresh JVM."""
 
 from __future__ import annotations
 
+import glob
 import os
 import subprocess
 import sys
@@ -63,6 +64,95 @@ def test_apply_runtime_conf_warns_on_unsettable_conf_and_goes_on():
         warnings.simplefilter("error")
         apply_runtime_conf(session)
     assert conf.calls == []
+
+
+ICU_CASE = "spark.sql.icu.caseMappings.enabled"
+
+#: ASCII, then non-ASCII strings whose case mapping is special: the fi
+#: ligature, sharp s and capital sharp s, Greek final sigma, dotted and
+#: dotless i, characters with no single-character title case, Cherokee,
+#: A with stroke (its lower case is longer in UTF-8) and the dz digraphs.
+CASE_SAMPLE = [
+    "ONLINE queue brokeroff", "\ufb01le", "stra\xdfe \u1e9e",
+    "\u039f\u0394\u039f\u03a3 \u03bf\u03b4\u03bf\u03c2", "\u0130stanbul \u0131",
+    "\u0149 \u01f0 \u0390", "\u13a0\uab70", "\u023a \u2c65", "\u01c5 \u01c6 \u01c4",
+]
+
+#: initcap of CASE_SAMPLE where the JVM's simple title-case mappings
+#: and ICU's full ones differ; on every other string they agree.
+INITCAP_JVM = {
+    "\ufb01le": "\ufb01le",
+    "stra\xdfe \u1e9e": "Stra\xdfe \xdf",
+    "\u0130stanbul \u0131": "I\u0307stanbul I",
+    "\u0149 \u01f0 \u0390": "\u0149 \u01f0 \u0390",
+}
+INITCAP_ICU = {
+    "\ufb01le": "File",
+    "stra\xdfe \u1e9e": "Stra\xdfe \u1e9e",
+    "\u0130stanbul \u0131": "\u0130stanbul I",
+    "\u0149 \u01f0 \u0390": "\u02bcN J\u030c \u0399\u0308\u0301",
+}
+
+
+def test_runtime_conf_pins_jvm_case_mapping():
+    """RUNTIME_CONF turns ICU case mapping off, and apply_runtime_conf
+    sets it on a session that lacks it."""
+    assert RUNTIME_CONF[ICU_CASE] == "false"
+    conf = _Conf(refuse="")
+    apply_runtime_conf(_Session(conf))
+    assert ("set", ICU_CASE) in conf.calls
+
+
+@pytest.fixture(scope="module")
+def case_sessions(spark, tmp_path_factory):
+    """The pinned session and an ICU one, each with CASE_SAMPLE as the
+    parquet view ``case_sample`` (a file scan, so lower/upper run in
+    generated code, not in constant folding)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path_factory.mktemp("case") / "case_sample.parquet")
+    pq.write_table(pa.table({"s": CASE_SAMPLE}), path)
+    icu = spark.newSession()
+    icu.conf.set(ICU_CASE, "true")
+    for sess in (spark, icu):
+        sess.read.parquet(path).createOrReplaceTempView("case_sample")
+    yield spark, icu
+    spark.catalog.dropTempView("case_sample")
+
+
+def _case_rows(sess, expr):
+    return dict(sess.sql(f"SELECT s, {expr} FROM case_sample").collect())
+
+
+def test_lower_upper_match_icu(case_sessions):
+    pinned, icu = case_sessions
+    assert pinned.conf.get(ICU_CASE) == "false"
+    for expr in ("lower(s)", "upper(s)"):
+        rows = _case_rows(pinned, expr)
+        assert set(rows) == set(CASE_SAMPLE)
+        assert rows == _case_rows(icu, expr), expr
+
+
+def test_initcap_differences_are_the_known_ones(case_sessions):
+    pinned, icu = case_sessions
+    jvm, full = _case_rows(pinned, "initcap(s)"), _case_rows(icu, "initcap(s)")
+    assert {s: jvm[s] for s in INITCAP_JVM} == INITCAP_JVM
+    assert {s: full[s] for s in INITCAP_ICU} == INITCAP_ICU
+    assert {s for s in CASE_SAMPLE if jvm[s] != full[s]} == set(INITCAP_JVM)
+
+
+def test_codegen_calls_the_jvm_case_mapping(case_sessions):
+    """Generated code for lower/upper over a parquet scan calls
+    ``execBinary``, not ``execBinaryICU``, which is what initializes
+    ICU's title-case table; the ICU session shows the check can fail."""
+    pinned, icu = case_sessions
+    query = "EXPLAIN CODEGEN SELECT lower(s), upper(s) FROM case_sample"
+    code = pinned.sql(query).collect()[0][0]
+    assert "CollationSupport.Lower.execBinary(" in code
+    assert "CollationSupport.Upper.execBinary(" in code
+    assert "execBinaryICU" not in code
+    assert "CollationSupport.Lower.execBinaryICU(" in icu.sql(query).collect()[0][0]
 
 
 def test_mllib_session_extension_stays_off(spark):
@@ -162,20 +252,34 @@ def test_pandas_import_runs_only_on_a_fresh_launch(monkeypatch):
     assert events == ["getOrCreate"]
 
 
-def _cli_sql(env=None) -> subprocess.CompletedProcess:
+COUNT_QUERY = "SELECT count(*) AS n FROM lineitem"
+LOWER_QUERY = ("SELECT lower(l_returnflag) AS flag, count(*) AS n FROM lineitem"
+               " GROUP BY 1 ORDER BY 1")
+
+
+def _cli_sql(env=None, query=COUNT_QUERY) -> subprocess.CompletedProcess:
     return subprocess.run(
         [sys.executable, "-m", "ask_duckdb_spark.cli.sql", "--sf-dir", SF_DIR,
-         "--table", "lineitem", "--query", "SELECT count(*) AS n FROM lineitem"],
+         "--table", "lineitem", "--query", query],
         cwd=ROOT, capture_output=True, text=True, timeout=120, env=env)
 
 
-def test_cli_sql_one_shot_on_a_fresh_jvm():
+def test_cli_sql_one_shot_on_a_fresh_jvm(tmp_path):
     """One ``cli.sql`` run in its own process: JVM launch, class preload
     and session start under a time limit, so a start-up hang (say, a
-    class-initialization deadlock) fails here instead of hanging."""
-    proc = _cli_sql()
+    class-initialization deadlock) fails here instead of hanging. Its
+    query lowercases a column, and the JVMs' class-initialization logs
+    show ICU's case-mapping class (whose static initializer builds the
+    all-of-Unicode title-case table) was never initialized."""
+    log = str(tmp_path / "ci_%p.txt")
+    env = {**os.environ, "JDK_JAVA_OPTIONS": f"-Xlog:class+init=info:file={log}"}
+    proc = _cli_sql(env, LOWER_QUERY)
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "=== Query result (1 rows) ===" in proc.stdout, proc.stdout
+    assert proc.stdout == ("=== Query result (3 rows) ===\n"
+                           "flag    n\n   a 1962\n   n 2070\n   r 1968\n"), proc.stdout
+    logs = [open(p).read() for p in glob.glob(str(tmp_path / "ci_*.txt"))]
+    assert any("CollationSupport$Lower" in text for text in logs), len(logs)
+    assert not any("CollationAwareUTF8String" in text for text in logs)
 
 
 def test_cli_sql_without_pinned_threads():
