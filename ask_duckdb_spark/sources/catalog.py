@@ -15,6 +15,18 @@ Scale notes (100 TB posture):
 - The only per-table fixup (a user's nanosecond events.ts -> micros)
   is a zero-shuffle projection, fused into the scan stage by
   whole-stage codegen.
+- One-task rule: a table small enough to answer in one task (one
+  file of one row group, at most ``spark.sql.files.openCostInBytes``
+  uncompressed, 4 MB by default) is registered by
+  :func:`register_views` as a one-partition view, so an aggregate, a
+  sort or a window over it runs as one job with no exchange. All its
+  work after the scan then runs in that task, where AQE would have
+  split a shuffle into up to one partition per core; the bound keeps
+  the rule to sizes where aggregates, sorts and windows measured no
+  slower in one task (a join that returns every row is slower, see
+  :func:`register_views`). It cannot fire at scale: a table past 4 MB
+  keeps the scan's partitions and today's plans.
+  :func:`load_table` frames (the operators' input) are never coalesced.
 - Small tables built in Python (the queuedata fixture, ring and
   merge lists) go through :func:`local_frame`: an Arrow LocalRelation
   the JVM scans itself, never a Python RDD.
@@ -24,7 +36,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable, Mapping, Sequence
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +55,9 @@ from pyspark.sql.types import (
 )
 
 from ..session import apply_runtime_conf
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: All driver-materialized fixture tables (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -77,33 +92,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     same thing a warehouse catalog (or DuckDB's attached database) does
     — NOT data caching: no rows are persisted, every query still scans.
     The memo lives on the session object, so it dies with the session.
+    Beside the frame it keeps the uncompressed size of the file's row
+    group when the file holds exactly one (else ``None``), read from
+    the same footer, for :func:`register_views`.
     """
     apply_runtime_conf(spark)
-    cache: dict = spark.__dict__.setdefault("_adbs_table_cache", {})
+    cache: dict = spark.__dict__.setdefault(_MEMO, {})
     key = (os.path.abspath(sf_dir), name)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = footer_schema(spark, path) if os.path.isfile(path) else None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = _events_fixup(reader.parquet(path), name)
-    cache[key] = df
-    return df
+    if key not in cache:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        schema = one_group = None
+        if os.path.isfile(path):
+            import pyarrow.parquet as pq
+
+            with pq.ParquetFile(path) as footer:  # a non-parquet file raises here
+                schema = footer_schema(spark, footer.schema_arrow)
+                if footer.metadata.num_row_groups == 1:
+                    one_group = footer.metadata.row_group(0).total_byte_size
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        cache[key] = (_events_fixup(reader.parquet(path), name), one_group)
+    return cache[key][0]
 
 
-def footer_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The Spark schema of one parquet file, mapped from its footer.
+def footer_schema(spark: SparkSession, arrow: pa.Schema) -> StructType | None:
+    """The Spark schema a parquet footer's Arrow schema maps to.
 
     Gives what Spark's file-source inference gives (every field
     nullable) for the types the fixtures hold, and ``None`` for any
     other type (nanosecond timestamps, decimals, maps, structs, ...):
-    the caller then infers. A file that is not parquet raises here.
+    the caller then infers.
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    arrow = pq.read_schema(path)
     infer_ntz = spark.conf.get(_INFER_NTZ).lower() == "true"
     fields = []
     for field in arrow:
@@ -131,6 +151,8 @@ _FOOTER_TYPES: dict[str, DataType] = {
     "string": StringType(),
 }
 _INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+_MEMO = "_adbs_table_cache"  # load_table's memo on the session
+_ONE_TASK_BYTES = "spark.sql.files.openCostInBytes"
 
 
 def _events_fixup(df: DataFrame, name: str) -> DataFrame:
@@ -149,10 +171,36 @@ def _events_fixup(df: DataFrame, name: str) -> DataFrame:
 def register_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view; return the frames."""
+    """Register every fixture table as a temp view; return the views' frames.
+
+    A table small enough to answer in one task — one ``{name}.parquet``
+    file of one row group, whose uncompressed size is at most
+    ``spark.sql.files.openCostInBytes`` (4 MB by default, the smallest
+    split Spark's file scan makes) — is registered as one partition.
+    ``coalesce(1)`` adds no shuffle, and its single partition satisfies
+    the distribution an aggregate, a sort or a window asks for, so such
+    a question plans no shuffle and runs as one job (a broadcast join
+    still runs its broadcast as a job of its own). What that gives up
+    is the parallelism after the scan: AQE
+    (``coalescePartitions.parallelismFirst``, on by default) splits a
+    shuffle into up to one partition per core, each at least
+    ``coalescePartitions.minPartitionSize`` (1 MB), while the
+    one-partition plan runs the whole question in one task. Up to the
+    bound, aggregates, sorts and windows measured no slower in one
+    task; at 13.6 MB (sf0.1 ``lineitem``) a window took 36% longer. A
+    join that returns every row is slower at any size (the ``Coalesce``
+    ends the scan's code-generated stage), which a preview's limit
+    hides. Any other table keeps the scan's partitions.
+    """
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    bound = java_utils.byteStringAsBytes(spark.conf.get(_ONE_TASK_BYTES))
+    memo, root = spark.__dict__.setdefault(_MEMO, {}), os.path.abspath(sf_dir)
     out: dict[str, DataFrame] = {}
     for name in tables:
         df = load_table(spark, sf_dir, name)
+        one_group = memo[(root, name)][1]
+        if one_group is not None and one_group <= bound:
+            df = df.coalesce(1)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

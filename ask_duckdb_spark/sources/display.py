@@ -21,10 +21,15 @@ from pyspark.sql import DataFrame
 def result_preview(df: DataFrame, max_rows: int = 1000, count: bool = True):
     """Return (total_rows or None, pandas preview of at most max_rows).
 
-    Fetches ``max_rows + 1`` rows in ONE job; when the result fits the
+    Fetches ``max_rows + 1`` rows in one fetch; when the result fits the
     cap the exact count is free. Only a truncated result (+``count=True``)
-    pays a second, count-only job — and that one is cheap because
+    pays a second, count-only fetch — and that one is cheap because
     Catalyst prunes every column out of a ``count()`` scan.
+
+    A fetch is one Spark job only when its plan has no exchange, as over
+    one-partition inputs (``register_views``' one-task views, the
+    queuedata fixture). Otherwise AQE runs each exchange's stage as a
+    job of its own before the final one.
     """
     pdf = df.limit(max_rows + 1).toPandas()
     if len(pdf) <= max_rows:

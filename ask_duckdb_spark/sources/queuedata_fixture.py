@@ -21,6 +21,10 @@ list handed to ``createDataFrame`` becomes a Python RDD, and every scan
 of it re-runs Python workers to unpickle the 60 rows (four worker tasks
 per question over queuedata). An Arrow table becomes a LocalRelation:
 the rows sit in the plan and the JVM scans them (``LocalTableScan``).
+The frame is one partition (``coalesce(1)``, which adds no shuffle), as
+``register_views`` makes a one-task fixture table: an aggregate or an
+ORDER BY over the 60 rows plans no exchange and runs as one job, not
+as a shuffle or a range-partitioned sort that AQE splits into jobs.
 """
 
 from __future__ import annotations
@@ -85,7 +89,7 @@ _SCHEMA = (
 
 
 def queuedata_df(spark: SparkSession, n: int = N_ROWS) -> DataFrame:
-    return local_frame(spark, queuedata_rows(n), _SCHEMA)
+    return local_frame(spark, queuedata_rows(n), _SCHEMA).coalesce(1)
 
 
 def queuedata_dictionary() -> dict[str, Any]:

@@ -5,6 +5,7 @@ the queuedata table."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -45,3 +46,21 @@ def persisted_rdds(spark) -> set[int]:
     """Ids of the RDDs the context holds blocks for (persisted frames and
     local checkpoints alike)."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@contextlib.contextmanager
+def spark_jobs(spark, group: str):
+    """Run the block's Spark actions under job group ``group``; the
+    yielded list holds the ids of the jobs they ran once the block
+    exits (a job the group ran before the block is not counted)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(group))
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    ids.extend(sorted(set(tracker.getJobIdsForGroup(group)) - before))

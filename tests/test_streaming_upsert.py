@@ -34,7 +34,7 @@ from ask_duckdb_spark.streaming.upsert import (
     start_upsert_apply,
     upsert_apply,
 )
-from tests.conftest import SF_DIR, SF_DIR_001, persisted_rdds
+from tests.conftest import SF_DIR, SF_DIR_001, persisted_rdds, spark_jobs
 
 
 def _rows(df):
@@ -129,13 +129,9 @@ def test_upsert_apply_job_budget(spark, tmp_path):
     upsert_apply(spark, _src_orders(spark, SF_DIR), target, 0)  # warm-up
     batch = _src_orders(spark, SF_DIR)
     before = persisted_rdds(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("upsert_budget", "upsert_budget")
-    try:
+    with spark_jobs(spark, "upsert_budget") as jobs:
         upsert_apply(spark, batch, target, 1)
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup("upsert_budget")) <= 6
+    assert len(jobs) <= 6
     assert persisted_rdds(spark) <= before
 
 
